@@ -4,13 +4,16 @@ Jaccard, embedding-cosine near-dup.
 Scale design:
 - exact: hash-groupBy on a 128-bit content hash — one shuffle of
   (hash, key) pairs only, never content.
-- MinHash-LSH: per-doc signatures via ONE vectorized pandas UDF
-  (numpy, no per-row Python), then banding -> explode(bands) ->
-  groupBy(band_hash) -> within-bucket pairs. Candidate count is
-  bounded by bucket sizes, not O(n^2); hot buckets are inherently
-  rare with 32-bit band hashes and AQE splits any skewed bucket join.
-- SimHash: same shape, 64-bit signature, 4x16-bit band blocking,
-  verify by Hamming distance (built-in bit ops).
+- MinHash-LSH: per-doc signatures via ONE vectorized Arrow kernel
+  (numpy, no per-row Python), then banding -> explode(bands) with the
+  signature riding along -> ``bucket_local_pairs``, which verifies
+  each (band, bucket) in place. Work is bounded by bucket sizes, not
+  O(n^2), and a bucket over ``_HOT_BUCKET_CAP`` members is split into
+  chunk-pair work items inside the plan, so no task verifies more
+  than ~cap^2 pairs.
+- SimHash: same shape, 64-bit signature, (max_hamming + 1)-block
+  banding, verified by Hamming distance (XOR + byte-table popcount)
+  in the same ``bucket_local_pairs`` skeleton.
 - n-gram Jaccard: exact verification joined onto LSH candidates only.
 
 All thresholds/permutations are deterministic (fixed seeds) so
@@ -24,34 +27,12 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-#: signature tables left cached by ``materialize=False`` callers — the
-#: lazy path cannot unpersist before its caller's single action runs,
-#: so ownership transfers here; drain with release_lazy_caches()
-#: (ADVICE round 4: without an owner, a long-lived driver session
-#: running many one-shot plans accretes cached signature tables).
-_LAZY_PERSISTED: list[DataFrame] = []
-
-
-def release_lazy_caches() -> int:
-    """Unpersist signature tables registered by ``materialize=False``
-    runs of near_duplicates_minhash. Call after the single action over
-    a lazy near-dup plan (the driver entry queries call this at the
-    start of every query, bounding outstanding lazy caches to the one
-    query in flight). Returns the number of tables released."""
-    n = 0
-    while _LAZY_PERSISTED:
-        df = _LAZY_PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing cached
-            pass
-    return n
-
+from sparkval.session import _spread_small_input
 
 # Deterministic MinHash permutation parameters (a*x+b mod p), seed 42.
 _MINHASH_P = np.uint64((1 << 61) - 1)
@@ -175,21 +156,6 @@ def _shingles(text: str, k: int = 5, unique: bool = True) -> np.ndarray:
     return np.unique(h) if unique else h
 
 
-def _spread_small_input(df: DataFrame) -> DataFrame:
-    """Small-input fast path for the signature kernels: a tiny table
-    stored as one parquet file arrives as 1-2 scan partitions and
-    starves all but 2 cores through the CPU-bound signature UDF
-    (measured: 3.0 s -> 0.4 s for 5k docs at local[32]). Repartition
-    ONLY when the input has fewer partitions than the cluster has
-    slots — at 100 TB the table always has >> slots partitions, this
-    never fires, and content never shuffles."""
-    spark = df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < slots:
-        return df.repartition(slots)
-    return df
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        k_shingle: int = 5) -> DataFrame:
     """64-permutation MinHash signature per document — one mapInArrow
@@ -287,406 +253,309 @@ def minhash_jaccard(sigs: DataFrame, candidates: DataFrame, id_col: str = "doc_i
     )
 
 
-_PAIR_EST_SCHEMA = T.StructType(
+_PAIR_SCHEMA = T.StructType(
     [
         T.StructField("a", T.LongType(), False),
         T.StructField("b", T.LongType(), False),
-        T.StructField("jaccard_est", T.DoubleType(), False),
+        T.StructField("score", T.DoubleType(), False),
     ]
 )
 
-#: pairwise-agreement block edge for the bucket-local verify: bounds
-#: peak kernel memory at ~(block^2 x 8 B) per perm plane regardless of
-#: bucket size (a hot bucket is processed as block-pair tiles)
+#: tile edge of the bucket-local verify: one score call compares at
+#: most ~_VERIFY_BLOCK^2 payload pairs, bounding peak kernel memory
+#: regardless of bucket size (a large bucket is processed as
+#: block-pair tiles)
 _VERIFY_BLOCK = 2048
-#: buckets below this member count take the batched pair-enumeration
-#: path (all of a group's small-bucket pairs through one vectorized
-#: compare); at or above it, the unique-collapse + block-tile path
+#: buckets below this member count are verified many buckets per
+#: score call: each is padded to the next power of two and same-size
+#: tiles are stacked into one batch (the per-bucket numpy-call floor
+#: was profiled at ~0.3 ms x 397k buckets — the whole stage); at or
+#: above it, the identical-payload collapse + block-tile path
 _VERIFY_SPLIT = 512
 #: buckets ABOVE this member count are not verified in one task at
 #: all: stage 1 re-emits their rows as (chunk_i, chunk_j) block-pair
-#: work items and a second grouped stage verifies each block pair —
-#: per-task work is bounded at ~cap^2 pair cells however large the
-#: bucket, the levenshtein block-join lesson applied to LSH buckets.
-#: When no bucket exceeds the cap (every scale measured so far), the
-#: second stage receives zero rows and costs one empty shuffle.
+#: work items and stage 2 verifies each block pair — per-task work is
+#: bounded at ~cap^2 pair cells however large the bucket, the
+#: levenshtein block-join lesson applied to LSH buckets. When no
+#: bucket exceeds the cap (every scale measured so far), stage 2 only
+#: passes stage 1's verified pairs through.
 _HOT_BUCKET_CAP = 8192
 
-_MINHASH_STAGE1_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.LongType(), True),
-        T.StructField("b", T.LongType(), True),
-        T.StructField("jaccard_est", T.DoubleType(), True),
-        T.StructField("band", T.IntegerType(), True),
-        T.StructField("bucket", T.IntegerType(), True),
-        T.StructField("ci", T.IntegerType(), True),
-        T.StructField("cj", T.IntegerType(), True),
-        T.StructField("_id", T.LongType(), True),
-        T.StructField("chunk", T.IntegerType(), True),
-        T.StructField("signature", T.ArrayType(T.LongType()), True),
-    ]
-)
+
+def _payload_matrix(arr: pa.Array, col: str) -> np.ndarray:
+    """(rows, width) view of a fixed-width array column in its native
+    element dtype, zero-copy over the values buffer. A null row, a null
+    element or rows of different lengths raise ValueError naming
+    ``col``: reshaping them would silently mis-align every later row."""
+    if arr.null_count:
+        raise ValueError(f"column {col!r}: null array payload in {arr.null_count} row(s)")
+    lens = pc.list_value_length(arr).to_numpy()
+    if (lens != lens[0]).any():
+        raise ValueError(
+            f"column {col!r}: ragged array payload ({lens.min()} to {lens.max()} "
+            "elements per row); every row must have the same length"
+        )
+    values = arr.flatten()
+    if values.null_count:
+        raise ValueError(f"column {col!r}: null element inside an array payload")
+    return values.to_numpy().reshape(len(arr), int(lens[0]))
 
 
-def _pair_agreement_emit(S, S16, ids, pi, pj, threshold, out_a, out_b, out_j):
-    """Chunked int16-prefilter + exact-recount agreement over explicit
-    row-index pair arrays; appends surviving (min, max, est) to the
-    out lists. Shared by the small-bucket batch and the hot block-pair
-    kernel so the two paths cannot drift."""
-    chunk = 1 << 21  # ~256 MB of int16 gather per tile
-    for c0 in range(0, len(pi), chunk):
-        pic, pjc = pi[c0: c0 + chunk], pj[c0: c0 + chunk]
-        agree = (S16[pic] == S16[pjc]).sum(axis=1, dtype=np.int16)
-        cand = np.flatnonzero(agree / float(_N_PERM) >= threshold)
-        if not len(cand):
-            continue
-        pic, pjc = pic[cand], pjc[cand]
-        exact = (S[pic] == S[pjc]).sum(axis=1)
-        est = exact / float(_N_PERM)
-        keep = est >= threshold
-        if keep.any():
-            ia, ib = ids[pic[keep]], ids[pjc[keep]]
-            out_a.append(np.minimum(ia, ib))
-            out_b.append(np.maximum(ia, ib))
-            out_j.append(est[keep])
+def _collapse(P: np.ndarray, rows: np.ndarray):
+    """Group ``rows`` by byte-identical payload: (one row per distinct
+    payload, all rows ordered by group, group start offsets). Every
+    score is a function of the two payloads alone, so a bucket of many
+    identical payloads (e.g. boilerplate docs with one signature)
+    costs O(distinct^2) score cells, not O(members^2)."""
+    seg = np.ascontiguousarray(P[rows])
+    void = seg.view(np.dtype((np.void, seg.dtype.itemsize * seg.shape[1]))).ravel()
+    _, first, inv = np.unique(void, return_index=True, return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    starts = np.searchsorted(inv[order], np.arange(len(first) + 1))
+    return rows[first], rows[order], starts
 
 
-def _bucket_pairs_minhash(bands: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Bucket-local candidate generation + signature-agreement verify
-    in ONE grouped numpy kernel — the §8 rewrite of the old
-    self-join + distinct + signature-join shape, which at 10^5+ docs
-    shuffled the 512 B signature payload once per CANDIDATE PAIR
-    (O(sum of bucket^2) rows: measured 103M pairs / ~100 GB of shuffle
-    at the 100k-doc bench scale, for 62k surviving pairs).
+def _block_pairs(P, rows_i, rows_j, score_block, block, out) -> None:
+    """Every pair of ``rows_i`` x ``rows_j`` (``rows_j`` None: every
+    pair within ``rows_i``), scored over identical-payload groups in
+    block x block tiles; appends (row, row, score) for kept pairs."""
+    diag = rows_j is None
+    ui, mi, gi = _collapse(P, rows_i)
+    uj, mj, gj = (ui, mi, gi) if diag else _collapse(P, rows_j)
+    ni, nj = np.diff(gi), np.diff(gj)
+    for i0 in range(0, len(ui), block):
+        for j0 in range(i0 if diag else 0, len(uj), block):
+            bi, bj = slice(i0, i0 + block), slice(j0, j0 + block)
+            mask = np.ones((len(ui[bi]), len(uj[bj])), dtype=bool)
+            if diag and i0 == j0:
+                # strict upper, plus the diagonal where one distinct
+                # payload stands for several rows
+                mask = np.triu(mask, 1)
+                np.fill_diagonal(mask, ni[bi] > 1)
+            cells, s = score_block(P[ui[bi]][None], P[uj[bj]][None], mask[None])
+            if not len(cells):
+                continue
+            x, y = i0 + cells // mask.shape[1], j0 + cells % mask.shape[1]
+            # expand each kept (group, group) cell to its member pairs
+            cnt = ni[x] * nj[y]
+            k = _segmented_arange(cnt)
+            width = np.repeat(nj[y], cnt)
+            pi, pj = k // width, k % width
+            keep = (np.repeat(x != y, cnt) | (pi < pj)) if diag else slice(None)
+            out.append((
+                mi[np.repeat(gi[x], cnt) + pi][keep],
+                mj[np.repeat(gj[y], cnt) + pj][keep],
+                np.repeat(s, cnt)[keep],
+            ))
 
-    Here the signature rides the (id, band, bucket) explode ONCE
-    (O(docs x bands) rows), buckets are verified in place with
-    vectorized agreement counts, and only pairs meeting ``threshold``
-    ever leave the kernel. Identical results by construction: the
-    candidate set (same-bucket pairs, a < b) and the estimate
-    (agreeing permutations / 64) are the same quantities the join
-    formulation computed.
 
-    Mechanics per (band, bucket) segment:
-    - rows with an IDENTICAL full signature are collapsed first
-      (np.unique on the raw signature bytes); within such a group every
-      pair agrees on all 64 perms (est exactly 1.0), and cross-group
-      estimates only need the unique-signature matrix — a hot bucket of
-      near-identical docs costs O(unique^2), not O(members^2);
-    - unique-signature agreement is computed in block tiles of
-      ``_VERIFY_BLOCK`` with one vectorized equality per perm plane;
-    - surviving (group, group) cells expand to id pairs (min, max) —
-      output volume is the true near-dup pair count, nothing else.
+def _small_pairs(P, starts, sizes, score_block, block, out) -> None:
+    """Every within-segment pair of many small segments, with few score
+    calls: each segment is padded to the next power of two R and the
+    segments of one size class go through the score function as a
+    stack of R x R tiles (strict-upper mask, padding masked out)."""
+    edge = np.maximum(2, 1 << np.ceil(np.log2(sizes)).astype(np.int64))
+    for r in np.unique(edge):
+        st, sz = starts[edge == r], sizes[edge == r]
+        lane = np.arange(r)
+        valid = lane < sz[:, None]
+        idx = st[:, None] + np.where(valid, lane, 0)
+        tri = np.triu(np.ones((r, r), dtype=bool), 1)
+        step = max(1, block * block // (r * max(r, P.shape[1])))
+        for c0 in range(0, len(st), step):
+            ix = idx[c0: c0 + step]
+            mask = tri & valid[c0: c0 + step, None, :]
+            X = P[ix]
+            cells, s = score_block(X, X, mask)
+            t, i, j = np.unravel_index(cells, mask.shape)
+            out.append((ix[t, i], ix[t, j], s))
 
-    Buckets are grouped under a coarse deterministic key
-    (xxhash64(band, bucket) mod groups) so the grouped-map stage sees
-    O(parallelism x 32) groups instead of one Python call per bucket
-    (pure per-group overhead at millions of tiny buckets); a bucket
-    never straddles groups, so segmentation inside the kernel is
-    exact."""
+
+def _id_pairs(ids: np.ndarray, out: list) -> dict[str, np.ndarray]:
+    """(a, b, score) columns of kept (row, row, score) triples: a < b,
+    and a pair of one id with itself (a repeated input id) dropped."""
+    if not out:
+        return {"a": np.empty(0, np.int64), "b": np.empty(0, np.int64),
+                "score": np.empty(0, np.float64)}
+    a = ids[np.concatenate([o[0] for o in out])]
+    b = ids[np.concatenate([o[1] for o in out])]
+    s = np.concatenate([o[2] for o in out]).astype(np.float64)
+    keep = a != b
+    return {"a": np.minimum(a, b)[keep], "b": np.maximum(a, b)[keep], "score": s[keep]}
+
+
+def bucket_local_pairs(bands: DataFrame, id_col: str, payload_col: str,
+                       score_block) -> DataFrame:
+    """The verify stage every LSH near-dup shares: all pairs of rows
+    that share a (band, bucket), scored in place, as a DataFrame of
+    distinct (a, b, score) with a < b.
+
+    ``bands`` carries (id_col, band, bucket, payload_col) with one
+    fixed-width array payload per row (signature, vector). Each family
+    only supplies ``score_block(X, Y, mask) -> (cells, scores)``: X
+    and Y are (tiles, rows, width) payload stacks, mask the (tiles,
+    rows_x, rows_y) cells to consider; it returns the flat indices of
+    the masked cells it keeps and their scores. Scores must depend on
+    the two payloads alone and be symmetric.
+
+    The skeleton owns everything else:
+    - coarse grouping: buckets are grouped under
+      xxhash64(band, bucket) mod (parallelism x 32), so the grouped
+      stage sees O(parallelism x 32) Python calls instead of one per
+      bucket (pure per-call overhead at millions of tiny buckets); a
+      bucket never straddles groups, so segmentation inside the kernel
+      is exact;
+    - the (band, bucket) segment walk over id-sorted rows;
+    - tiling: small buckets batched as padded same-size tiles, larger
+      ones collapsed to distinct payloads and tiled in
+      ``_VERIFY_BLOCK`` blocks, always with the strict-upper mask;
+    - dropping pairs of an id with itself (a repeated input id) and
+      the final dropDuplicates — a pair found in k bands carries the
+      same score k times;
+    - hot buckets, decided inside the plan: stage 1 verifies buckets
+      up to ``_HOT_BUCKET_CAP`` and re-emits larger ones as (band,
+      bucket, ci, cj) chunk-pair work items in the same output as its
+      verified pairs. Stage 2 groups that output once: a work item is
+      one chunk pair to verify, verified pairs pass through (keyed by
+      band -1 and their stage-1 group mod the slot count: each stage-2
+      call costs ~2 ms of framework overhead even when it only copies
+      rows). Nothing is checkpointed and no job runs while the plan is
+      built.
+    """
     spark = bands.sparkSession
-    n_groups = max(spark.sparkContext.defaultParallelism, 8) * 32
+    slots = max(spark.sparkContext.defaultParallelism, 8)
+    n_groups = slots * 32
+    # read once at plan build: the kernels below ship with these values
+    block, split, cap = _VERIFY_BLOCK, _VERIFY_SPLIT, _HOT_BUCKET_CAP
+    stage1_schema = T.StructType(
+        [T.StructField(c, T.LongType(), False)
+         for c in ("band", "bucket", "ci", "cj", "chunk", "a", "b")]
+        + [T.StructField("score", T.DoubleType(), False),
+           T.StructField("_payload", bands.schema[payload_col].dataType, False)]
+    )
 
-    def _stage1_table(out_a, out_b, out_j, hot) -> pa.Table:
-        n_p = 0
-        cols: dict[str, object] = {}
-        if out_a:
-            a = np.concatenate(out_a)
-            b = np.concatenate(out_b)
-            j = np.concatenate(out_j)
-            n_p = len(a)
-        else:
-            a = b = np.empty(0, dtype=np.int64)
-            j = np.empty(0, dtype=np.float64)
-        if hot:
-            h_band = np.concatenate([h[0] for h in hot])
-            h_bucket = np.concatenate([h[1] for h in hot])
-            h_ci = np.concatenate([h[2] for h in hot])
-            h_cj = np.concatenate([h[3] for h in hot])
-            h_id = np.concatenate([h[4] for h in hot])
-            h_chunk = np.concatenate([h[5] for h in hot])
-            h_sig = np.concatenate([h[6] for h in hot])  # (rows, 64) stacked
-            n_h = len(h_id)
-        else:
-            n_h = 0
-        cols["a"] = pa.concat_arrays(
-            [pa.array(a, pa.int64()), pa.nulls(n_h, pa.int64())]
-        )
-        cols["b"] = pa.concat_arrays(
-            [pa.array(b, pa.int64()), pa.nulls(n_h, pa.int64())]
-        )
-        cols["jaccard_est"] = pa.concat_arrays(
-            [pa.array(j, pa.float64()), pa.nulls(n_h, pa.float64())]
-        )
-        if n_h:
-            cols["band"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_band.astype(np.int32))]
-            )
-            cols["bucket"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_bucket.astype(np.int32))]
-            )
-            cols["ci"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_ci.astype(np.int32))]
-            )
-            cols["cj"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_cj.astype(np.int32))]
-            )
-            cols["_id"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int64()), pa.array(h_id.astype(np.int64))]
-            )
-            cols["chunk"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_chunk.astype(np.int32))]
-            )
-            sig_list = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_h + 1) * _N_PERM, pa.int32()),
-                pa.array(h_sig.reshape(-1), pa.int64()),
-            )
-            cols["signature"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.list_(pa.int64())), sig_list]
-            )
-        else:
-            cols["band"] = pa.nulls(n_p, pa.int32())
-            cols["bucket"] = pa.nulls(n_p, pa.int32())
-            cols["ci"] = pa.nulls(n_p, pa.int32())
-            cols["cj"] = pa.nulls(n_p, pa.int32())
-            cols["_id"] = pa.nulls(n_p, pa.int64())
-            cols["chunk"] = pa.nulls(n_p, pa.int32())
-            cols["signature"] = pa.nulls(n_p, pa.list_(pa.int64()))
-        return pa.table(
-            {f.name: cols[f.name] for f in _MINHASH_STAGE1_SCHEMA.fields}
-        )
-
-    def verify(tbl: pa.Table) -> pa.Table:
-        empty = _stage1_table([], [], [], [])
-        m = tbl.num_rows
-        if m < 2:
-            return empty
+    def verify(key: tuple, tbl: pa.Table) -> pa.Table:
         tbl = tbl.combine_chunks()
-        ids = tbl.column(id_col).to_numpy().astype(np.int64)
-        band = tbl.column("band").to_numpy()
-        bucket = tbl.column("bucket").to_numpy()
-        # zero-copy (n, 64) view of the list column's values buffer —
-        # no per-row ndarray materialization
-        sig_arr = tbl.column("signature").chunk(0)
-        S = sig_arr.flatten().to_numpy().reshape(m, _N_PERM)
+        payload_type = tbl.schema.field("_payload").type
+        P = _payload_matrix(tbl.column("_payload").chunk(0), payload_col)
+        ids = tbl.column("_id").to_numpy().astype(np.int64)
+        band = tbl.column("band").to_numpy().astype(np.int64)
+        bucket = tbl.column("bucket").to_numpy().astype(np.int64)
         order = np.lexsort((ids, bucket, band))
-        ids, band, bucket, S = ids[order], band[order], bucket[order], S[order]
-        seg_new = np.empty(m, dtype=bool)
-        seg_new[0] = True
+        ids, band, bucket, P = ids[order], band[order], bucket[order], P[order]
+        m = len(ids)
+        seg_new = np.ones(m, dtype=bool)
         seg_new[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
         starts = np.flatnonzero(seg_new)
-        ends = np.append(starts[1:], m)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_j: list[np.ndarray] = []
-        hot: list[tuple] = []
-
-        def emit(a: np.ndarray, b: np.ndarray, est: float) -> None:
-            lo = np.minimum(a, b)
-            hi = np.maximum(a, b)
-            out_a.append(lo)
-            out_b.append(hi)
-            out_j.append(np.full(len(lo), est))
-
-        # Two regimes, identical semantics (the split is purely a cost
-        # model — both compute agreement over every same-bucket pair):
-        #
-        # SMALL segments (< _VERIFY_SPLIT members — the overwhelming
-        # majority: the bench-scale distribution has 397k buckets with
-        # median 2): enumerating each bucket's (i < j) member pairs and
-        # batching ALL of a group's pairs through ONE vectorized
-        # row-gather compare removes the per-bucket numpy-call floor
-        # (profiled at ~0.3 ms/bucket x 397k buckets = the whole stage).
-        #
-        # LARGE segments: identical full signatures are collapsed first
-        # (np.unique over the raw bytes — near-identical hot buckets
-        # then cost O(unique^2), not O(members^2)) and the unique
-        # matrix is compared in block tiles.
-        #
-        # Both regimes bulk-count agreement on the LOW 16 BITS of each
-        # perm value (4x less memory traffic than int64): truncation
-        # equality is implied by full equality, so the truncated count
-        # only ever OVER-estimates — no candidate is lost — and every
-        # candidate is re-counted exactly on the full values before
-        # anything is emitted.
-        S16 = S.astype(np.int16)
-        small_pi: list[np.ndarray] = []
-        small_pj: list[np.ndarray] = []
-        for s, e in zip(starts, ends):
-            mm = e - s
-            if mm < 2:
-                continue
-            if mm < _VERIFY_SPLIT:
-                ii, jj = np.triu_indices(mm, k=1)
-                small_pi.append(s + ii)
-                small_pj.append(s + jj)
-                continue
-            if mm > _HOT_BUCKET_CAP:
-                # too big to verify in one task: re-emit as block-pair
-                # work items for stage 2. Chunks are contiguous runs of
-                # the id-sorted segment (deterministic); each member is
-                # emitted once per chunk pair that includes its chunk,
-                # so every (x, y) pair lands in exactly one
-                # (min(cx,cy), max(cx,cy)) group.
-                nck = int(-(-mm // _HOT_BUCKET_CAP))  # ceil
-                chunk_of = (np.arange(mm, dtype=np.int64) * nck // mm).astype(np.int32)
-                rep_chunk = np.repeat(chunk_of, nck)
-                rep_j = np.tile(np.arange(nck, dtype=np.int32), mm)
-                hot.append((
-                    np.repeat(band[s:e], nck),
-                    np.repeat(bucket[s:e], nck),
-                    np.minimum(rep_chunk, rep_j),
-                    np.maximum(rep_chunk, rep_j),
-                    np.repeat(ids[s:e], nck),
-                    rep_chunk,
-                    np.repeat(S[s:e], nck, axis=0),
-                ))
-                continue
-            seg = np.ascontiguousarray(S[s:e])
-            seg_ids = ids[s:e]
-            # collapse identical signatures (memcmp-sorted void view)
-            void = seg.view([("", seg.dtype)] * seg.shape[1]).ravel()
-            _, first_idx, inv = np.unique(void, return_index=True, return_inverse=True)
-            u = len(first_idx)
-            U = seg[first_idx]
-            # member ids per unique-signature group
-            ginv_order = np.argsort(inv, kind="stable")
-            gbounds = np.searchsorted(inv[ginv_order], np.arange(u + 1))
-            members = [seg_ids[ginv_order[gbounds[g]: gbounds[g + 1]]] for g in range(u)]
-            # within-group pairs: est exactly 64/64
-            if 1.0 >= threshold:
-                for mem in members:
-                    k = len(mem)
-                    if k >= 2:
-                        ii, jj = np.triu_indices(k, k=1)
-                        emit(mem[ii], mem[jj], 1.0)
-            # cross-group agreement, block-tiled over transposed-
-            # contiguous int16 perm planes (measured 5x faster than
-            # row-major int64 planes at the hot-bucket shape)
-            U16T = np.ascontiguousarray(U.astype(np.int16).T)
-            for i0 in range(0, u, _VERIFY_BLOCK):
-                i1 = min(i0 + _VERIFY_BLOCK, u)
-                for j0 in range(i0, u, _VERIFY_BLOCK):
-                    j1 = min(j0 + _VERIFY_BLOCK, u)
-                    agree = np.zeros((i1 - i0, j1 - j0), dtype=np.int16)
-                    for p in range(_N_PERM):
-                        agree += U16T[p, i0:i1, None] == U16T[p, None, j0:j1]
-                    hit = agree / float(_N_PERM) >= threshold
-                    if i0 == j0:
-                        hit &= ~np.tri(*hit.shape, dtype=bool)  # strict upper
-                    gi, gj = np.nonzero(hit)
-                    if not len(gi):
-                        continue
-                    exact = (U[i0 + gi] == U[j0 + gj]).sum(axis=1)
-                    est_exact = exact / float(_N_PERM)
-                    for bi, bj, ex in zip(gi, gj, est_exact):
-                        if ex < threshold:
-                            continue
-                        A, B = members[i0 + bi], members[j0 + bj]
-                        emit(
-                            np.repeat(A, len(B)),
-                            np.tile(B, len(A)),
-                            float(ex),
-                        )
-        # one batched compare for every small-bucket pair in the group
-        if small_pi:
-            _pair_agreement_emit(
-                S, S16, ids,
-                np.concatenate(small_pi), np.concatenate(small_pj),
-                threshold, out_a, out_b, out_j,
-            )
-        return _stage1_table(out_a, out_b, out_j, hot)
-
-    def hot_verify(tbl: pa.Table) -> pa.Table:
-        """Stage 2: one (band, bucket, ci, cj) block pair — within-chunk
-        pairs when ci == cj, cross-chunk pairs otherwise. Same
-        prefilter+exact arithmetic as stage 1."""
-        empty = pa.table(
-            {"a": pa.array([], pa.int64()), "b": pa.array([], pa.int64()),
-             "jaccard_est": pa.array([], pa.float64())}
+        sizes = np.diff(np.append(starts, m))
+        out: list[tuple] = []
+        small = (sizes >= 2) & (sizes < split)
+        if small.any():
+            _small_pairs(P, starts[small], sizes[small], score_block, block, out)
+        large = (sizes >= split) & (sizes <= cap)
+        for s, n in zip(starts[large], sizes[large]):
+            _block_pairs(P, np.arange(s, s + n), None, score_block, block, out)
+        # hot buckets: chunks are contiguous runs of the id-sorted
+        # segment; each member is emitted once per chunk pair that
+        # includes its chunk, so every pair lands in exactly one
+        # (min(cx, cy), max(cx, cy)) work item
+        rows, chunk, other = ([np.empty(0, np.int64)] for _ in range(3))
+        for s, n in zip(starts[sizes > cap], sizes[sizes > cap]):
+            nck = int(-(-n // cap))
+            rows.append(np.repeat(np.arange(s, s + n), nck))
+            chunk.append(np.repeat(np.arange(n, dtype=np.int64) * nck // n, nck))
+            other.append(np.tile(np.arange(nck, dtype=np.int64), n))
+        rows, chunk, other = (np.concatenate(v) for v in (rows, chunk, other))
+        ci, cj = np.minimum(chunk, other), np.maximum(chunk, other)
+        pairs = _id_pairs(ids, out)
+        n_p, n_w = len(pairs["a"]), len(rows)
+        cols = {
+            "band": np.concatenate([np.full(n_p, -1), band[rows]]),
+            "bucket": np.concatenate([np.full(n_p, key[0].as_py() % slots), bucket[rows]]),
+            "ci": np.concatenate([np.zeros(n_p, np.int64), ci]),
+            "cj": np.concatenate([np.zeros(n_p, np.int64), cj]),
+            "chunk": np.concatenate([np.zeros(n_p, np.int64), chunk]),
+            "a": np.concatenate([pairs["a"], ids[rows]]),
+            "b": np.concatenate([pairs["b"], np.zeros(n_w, np.int64)]),
+        }
+        tbl = pa.table({c: pa.array(v.astype(np.int64)) for c, v in cols.items()})
+        # pass-through rows carry an empty payload
+        lens = np.repeat([0, P.shape[1]], [n_p, n_w])
+        offsets = np.concatenate(([0], np.cumsum(lens)))
+        return tbl.append_column(
+            "score", pa.array(np.concatenate([pairs["score"], np.zeros(n_w)]))
+        ).append_column(
+            "_payload",
+            pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
+                                     pa.array(P[rows].reshape(-1)), type=payload_type),
         )
-        m = tbl.num_rows
-        if m < 2:
-            return empty
+
+    def verify_hot(key: tuple, tbl: pa.Table) -> pa.Table:
+        if key[0].as_py() < 0:  # stage-1 verified pairs pass through
+            return tbl.select(["a", "b", "score"])
         tbl = tbl.combine_chunks()
-        ids = tbl.column("_id").to_numpy().astype(np.int64)
+        P = _payload_matrix(tbl.column("_payload").chunk(0), payload_col)
         chunk = tbl.column("chunk").to_numpy()
-        ci = int(tbl.column("ci")[0].as_py())
-        cj = int(tbl.column("cj")[0].as_py())
-        S = tbl.column("signature").chunk(0).flatten().to_numpy().reshape(m, _N_PERM)
-        S16 = S.astype(np.int16)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_j: list[np.ndarray] = []
+        ci, cj = key[2].as_py(), key[3].as_py()
+        rows = np.arange(len(chunk))
+        out: list[tuple] = []
         if ci == cj:
-            pi, pj = np.triu_indices(m, k=1)
+            _block_pairs(P, rows, None, score_block, block, out)
         else:
-            ai = np.flatnonzero(chunk == ci)
-            bi = np.flatnonzero(chunk == cj)
-            pi = np.repeat(ai, len(bi))
-            pj = np.tile(bi, len(ai))
-        _pair_agreement_emit(S, S16, ids, pi, pj, threshold, out_a, out_b, out_j)
-        if not out_a:
-            return empty
-        return pa.table(
-            {"a": pa.array(np.concatenate(out_a), pa.int64()),
-             "b": pa.array(np.concatenate(out_b), pa.int64()),
-             "jaccard_est": pa.array(np.concatenate(out_j), pa.float64())}
-        )
+            _block_pairs(P, rows[chunk == ci], rows[chunk == cj], score_block, block, out)
+        return pa.table(_id_pairs(tbl.column("a").to_numpy(), out))
 
-    grouped = bands.withColumn(
-        "_grp", F.pmod(F.xxhash64("band", "bucket"), F.lit(n_groups))
+    stage1 = bands.select(
+        F.col(id_col).alias("_id"), "band", "bucket",
+        F.col(payload_col).alias("_payload"),
+        F.pmod(F.xxhash64("band", "bucket"), F.lit(n_groups)).alias("_grp"),
+    ).groupBy("_grp").applyInArrow(verify, stage1_schema)
+    pairs = stage1.groupBy("band", "bucket", "ci", "cj").applyInArrow(
+        verify_hot, _PAIR_SCHEMA
     )
-    # stage 1 feeds two consumers (verified pairs + hot work items);
-    # without a barrier each branch would re-run the verify kernel.
-    # Its output is tiny (surviving pairs + usually-zero hot rows), so
-    # an eager localCheckpoint pins one computation — NOT a result
-    # cache: it is recomputed from the parquet inputs on every fresh
-    # plan (each bench attempt builds a new one).
-    stage1 = grouped.groupBy("_grp").applyInArrow(
-        verify, _MINHASH_STAGE1_SCHEMA
-    ).localCheckpoint(eager=True)
-    verified = stage1.filter(F.col("a").isNotNull()).select("a", "b", "jaccard_est")
-    # runtime-adaptive stage 2 (the AQE idea, hand-rolled): stage 1 is
-    # already materialized, so probing for hot work items costs one
-    # ~ms job over checkpointed rows; at every scale measured so far
-    # there are none and the pipeline stays one grouped stage
-    has_hot = bool(
-        stage1.filter(F.col("_id").isNotNull()).limit(1).take(1)
-    )
-    if has_hot:
-        hot_items = stage1.filter(F.col("_id").isNotNull()).select(
-            "band", "bucket", "ci", "cj", "_id", "chunk", "signature"
-        )
-        hot_pairs = hot_items.groupBy("band", "bucket", "ci", "cj").applyInArrow(
-            hot_verify, _PAIR_EST_SCHEMA
-        )
-        verified = verified.unionByName(hot_pairs)
-    # a pair found in k bands carries the identical estimate k times
-    return verified.dropDuplicates(["a", "b"])
+    return pairs.dropDuplicates(["a", "b"])
+
+
+def _minhash_score(threshold: float):
+    """MinHash agreement score (agreeing permutations / 64), kept at
+    ``threshold``. Agreement is bulk-counted on the LOW 16 BITS of each
+    perm value over transposed-contiguous planes (4x less memory
+    traffic than int64; measured 5x faster at the hot-bucket shape):
+    truncation equality is implied by full equality, so the truncated
+    count only ever OVER-estimates — no pair is lost — and every
+    surviving pair is re-counted exactly on the full values."""
+    def score(X, Y, mask):
+        X16 = np.ascontiguousarray(np.moveaxis(X.astype(np.int16), -1, 0))
+        Y16 = np.ascontiguousarray(np.moveaxis(Y.astype(np.int16), -1, 0))
+        agree = np.zeros(mask.shape, dtype=np.int16)
+        for p in range(_N_PERM):
+            agree += X16[p][:, :, None] == Y16[p][:, None, :]
+        cells = np.flatnonzero(mask & (agree / float(_N_PERM) >= threshold))
+        t, i, j = np.unravel_index(cells, mask.shape)
+        est = (X[t, i] == Y[t, j]).sum(axis=1) / float(_N_PERM)
+        keep = est >= threshold
+        return cells[keep], est[keep]
+
+    return score
 
 
 def near_duplicates_minhash(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", threshold: float = 0.7,
-                            persist_signatures: bool = True,
                             materialize: bool = True) -> DataFrame:
     """End-to-end MinHash near-dup: signatures -> LSH banding ->
     bucket-local agreement verify -> threshold filter.
 
-    Round-6 shape: the signature column rides the banding explode and
-    buckets verify IN PLACE (``_bucket_pairs_minhash``), so signatures
-    cross the shuffle once per (doc, band) — O(corpus) — instead of
-    once per candidate pair (O(sum of bucket^2); the old join shape
-    measured 103M candidate rows for 62k surviving pairs at the
-    100k-doc bench scale). The signature kernel feeds exactly one
-    consumer now, so no signature cache exists in any mode:
-    ``persist_signatures`` is retained for API compatibility but has
-    nothing left to persist, and the ``release_lazy_caches()`` registry
-    stays empty on this path. With ``materialize=True`` (default) the
-    (tiny: id-pair) result is still forced via an eager
-    localCheckpoint so multi-action callers (CC builds edges from it
-    twice) never recompute the sweep; ``materialize=False`` returns
-    the lazy single-action plan the bench/driver entries consume.
+    The signature column rides the banding explode and buckets verify
+    IN PLACE (``bucket_local_pairs``), so signatures cross the shuffle
+    once per (doc, band) — O(corpus) — instead of once per candidate
+    pair (O(sum of bucket^2); the old join shape measured 103M
+    candidate rows for 62k surviving pairs at the 100k-doc bench
+    scale). The signature kernel feeds exactly one consumer, so no
+    signature cache exists. With ``materialize=True`` (default) the
+    (tiny: id-pair) result is forced via an eager localCheckpoint so
+    multi-action callers (CC builds edges from it twice) never
+    recompute the sweep; ``materialize=False`` returns a lazy plan —
+    no Spark job runs until the caller's action.
 
     Results are identical to the join formulation: candidate set =
     same-bucket pairs (a < b), estimate = agreeing permutations / 64,
@@ -697,8 +566,10 @@ def near_duplicates_minhash(df: DataFrame, text_col: str = "text",
     """
     sigs = minhash_signatures(df, text_col, id_col)
     bands = _band_table(sigs, id_col, n_bands=16, carry=("signature",))
-    est = _bucket_pairs_minhash(bands, id_col, threshold)
-    out = est.filter(F.col("jaccard_est") >= threshold)
+    est = bucket_local_pairs(bands, id_col, "signature", _minhash_score(threshold))
+    out = est.select("a", "b", F.col("score").alias("jaccard_est")).filter(
+        F.col("jaccard_est") >= threshold
+    )
     if materialize:
         out = out.localCheckpoint(eager=True)
     return out
@@ -761,7 +632,12 @@ def connected_components(pairs: DataFrame, src: str = "a", dst: str = "b",
     iterative algorithms on Spark. (A converged label table is a fixed
     point: extra propagation rounds inside a check window are cheap
     no-op joins over O(dup nodes) rows, never incorrect.)
+
+    ``max_iter`` must be >= 1: zero rounds would return unpropagated
+    labels, so it raises ValueError instead.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -979,6 +855,27 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     return _spread_small_input(df.select(id_col, text_col)).mapInArrow(gen, out_schema)
 
 
+#: set bits per byte value: the Hamming distance of two 64-bit
+#: signatures is the sum over the 8 bytes of their XOR (numpy 1.26 has
+#: no bitwise_count)
+_POPCOUNT8 = np.array([bin(v).count("1") for v in range(256)], dtype=np.uint8)
+
+
+def _simhash_score(max_hamming: int):
+    """Hamming distance of two 8-byte SimHash payloads (XOR, then the
+    byte-table popcount), kept at <= ``max_hamming``."""
+    def score(X, Y, mask):
+        xor = X[:, :, 0][:, :, None] ^ Y[:, :, 0][:, None, :]
+        octets = xor.view(np.uint8).reshape(*xor.shape, 8)
+        ham = _POPCOUNT8[octets[..., 0]]
+        for k in range(1, 8):
+            ham += _POPCOUNT8[octets[..., k]]
+        cells = np.flatnonzero(mask & (ham <= max_hamming))
+        return cells, ham.reshape(-1)[cells]
+
+    return score
+
+
 def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup via block LSH: the 64-bit signature splits into
@@ -989,12 +886,16 @@ def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
     4-block layout silently lost the recall guarantee at
     ``max_hamming >= 4``); the default 3 keeps the classic 4x16-bit
     layout bit-for-bit. Capped at 15 (16 x 4-bit blocks): beyond that
-    each block key carries so little entropy the candidate join
-    degenerates toward all-pairs — raise, don't silently scan."""
+    each block key carries so little entropy the buckets degenerate
+    toward all-pairs — raise, don't silently scan.
+
+    Each block is one LSH band (block index, block value) and the
+    signature rides the banding rows into ``bucket_local_pairs``, which
+    scores every same-block pair in place — no candidate self-join."""
     if not 0 <= max_hamming <= 15:
         raise ValueError(
             f"max_hamming={max_hamming} out of range [0, 15]: block LSH needs "
-            "max_hamming+1 blocks of >=4 bits each for a selective candidate join"
+            "max_hamming+1 blocks of >=4 bits each for selective buckets"
         )
     n_blocks = max_hamming + 1
     # near-equal widths summing to 64 (e.g. 4 blocks -> 16/16/16/16,
@@ -1003,9 +904,9 @@ def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
     widths = [64 // n_blocks + (1 if i < 64 % n_blocks else 0) for i in range(n_blocks)]
     starts = [sum(widths[:i]) for i in range(n_blocks)]
     sigs = simhash_signatures(df, text_col, id_col)
-    blocks = sigs.select(
+    bands = sigs.select(
         id_col,
-        "simhash",
+        F.array("simhash").alias("_sig"),
         F.posexplode(
             F.array(
                 *[
@@ -1019,29 +920,11 @@ def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
                     for i in range(n_blocks)
                 ]
             )
-        ).alias("block", "block_val"),
+        ).alias("band", "bucket"),
     )
-    l, r = blocks.alias("l"), blocks.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.block") == F.col("r.block"))
-            & (F.col("l.block_val") == F.col("r.block_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("a"),
-            F.col(f"r.{id_col}").alias("b"),
-            F.col("l.simhash").alias("ha"),
-            F.col("r.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     # no global sort in the hot path — the result is a pair set
-    return (
-        cands.select("a", "b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    return bucket_local_pairs(bands, id_col, "_sig", _simhash_score(max_hamming)).select(
+        "a", "b", F.col("score").cast("int").alias("hamming")
     )
 
 

@@ -132,7 +132,13 @@ def lsh_bands(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            try:
+                mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            except (TypeError, ValueError) as e:
+                raise ValueError(
+                    f"column {vec_col!r}: null or ragged embedding rows; "
+                    "every row needs a vector of the same length"
+                ) from e
             bits = (mat @ planes.T) > 0  # (n, L*P), one fused matmul
             buckets = bits.reshape(len(mat), n_tables, n_planes) @ weights
             ids = pdf[id_col].to_numpy()
@@ -547,109 +553,45 @@ def ivf_topk(
     )
 
 
-_PAIR_COS_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.LongType(), False),
-        T.StructField("b", T.LongType(), False),
-        T.StructField("cosine", T.DoubleType(), False),
-    ]
-)
-
-#: absolute margin for the fast matmul pre-filter inside the
-#: bucket-local verify: float32-product arithmetic differs from the
-#: float64 matmul by at most ~64 ulp(f32) ≈ 2e-7 for unit-norm
-#: vectors, so a 1e-6 band cannot drop a pair the exact arithmetic
-#: (or its 9-decimal rounding, max +5e-10) would keep
+#: absolute margin for the fast float64 matmul prefilter of the
+#: cosine score. The exact score multiplies in the element dtype
+#: (float32 for array<float>): each product carries a relative error
+#: <= 2^-24, so the dot's absolute error is <= 2^-24 * sum|a_i*b_i|
+#: <= 2^-24 * |a||b| (Cauchy-Schwarz), and the float32 squares inside
+#: the norms add as much again — about 1.2e-7 in the cosine, next to
+#: ~1e-15 of float64 rounding in the matmul. A 1e-6 band therefore
+#: cannot drop a pair the exact arithmetic (or its 9-decimal rounding,
+#: at most +5e-10) would keep.
 _COS_MARGIN = 1e-6
 
 
-def _bucket_pairs_cosine(
-    bands: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame:
-    """Bucket-local candidate generation + exact cosine verify in one
-    grouped numpy kernel — the §8 rewrite of the old self-join +
-    distinct + two vector joins, which shuffled the embedding payload
-    once per candidate pair (measured 29M distinct pairs for 20k
-    surviving ones at the 40k-vector bench scale).
+def _cosine_score(threshold: float):
+    """Cosine of two vector payloads for ``bucket_local_pairs``: a
+    normalized float64 matmul scores every masked cell; cells within
+    ``_COS_MARGIN`` of ``threshold`` or above are then re-scored with
+    BIT-EXACT legacy arithmetic — the products in the input element
+    dtype (zip_with multiplies floats as floats), accumulated
+    left-to-right in float64 (np.cumsum == the JVM aggregate fold),
+    norms likewise — so the emitted cosine is bit-identical to
+    cosine_pairs_exact's pre-rounding value. Rounding and the
+    threshold filter stay JVM-side. Cells below the margin cannot
+    reach ``threshold`` after rounding, so the result set is exactly
+    the join formulation's."""
+    cut = threshold - _COS_MARGIN
 
-    Per (band, bucket) segment: a normalized float64 matmul scores all
-    local pairs; pairs within ``_COS_MARGIN`` of ``threshold`` or
-    above are then re-scored with BIT-EXACT legacy arithmetic — the
-    products in the input element dtype (zip_with multiplies floats as
-    floats), accumulated left-to-right in float64 (np.cumsum ==
-    the JVM aggregate fold), norms likewise — so the emitted cosine is
-    bit-identical to cosine_pairs_exact's pre-rounding value. Rounding
-    and the threshold filter stay JVM-side, unchanged. Pairs below the
-    margin cannot reach ``threshold`` after rounding, so the result
-    set is exactly the join formulation's."""
-    spark = bands.sparkSession
-    n_groups = max(spark.sparkContext.defaultParallelism, 8) * 32
+    def norms(V):
+        return np.sqrt(np.cumsum((V * V).astype(np.float64), axis=-1)[..., -1])
 
-    import pyarrow as pa
+    def score(X, Y, mask):
+        nx, ny = norms(X), norms(Y)
+        Xn = X.astype(np.float64) / np.maximum(nx, 1e-300)[..., None]
+        Yn = Y.astype(np.float64) / np.maximum(ny, 1e-300)[..., None]
+        cells = np.flatnonzero(mask & (Xn @ np.swapaxes(Yn, -1, -2) >= cut))
+        t, i, j = np.unravel_index(cells, mask.shape)
+        dots = np.cumsum((X[t, i] * Y[t, j]).astype(np.float64), axis=1)[:, -1]
+        return cells, dots / (nx[t, i] * ny[t, j])
 
-    def verify(tbl: pa.Table) -> pa.Table:
-        empty = pa.table(
-            {"a": pa.array([], pa.int64()), "b": pa.array([], pa.int64()),
-             "cosine": pa.array([], pa.float64())}
-        )
-        m = tbl.num_rows
-        if m < 2:
-            return empty
-        tbl = tbl.combine_chunks()
-        ids = tbl.column(id_col).to_numpy().astype(np.int64)
-        band = tbl.column("band").to_numpy()
-        bucket = tbl.column("bucket").to_numpy()
-        # zero-copy (n, dim) view in the NATIVE element dtype — the
-        # exact values the legacy per-pair expressions saw
-        vec_arr = tbl.column(vec_col).chunk(0)
-        flat = vec_arr.flatten().to_numpy()
-        V = flat.reshape(m, len(flat) // m)
-        order = np.lexsort((ids, bucket, band))
-        ids, band, bucket, V = ids[order], band[order], bucket[order], V[order]
-        # exact norms, legacy arithmetic: element-dtype squares,
-        # float64 left-fold
-        sq = V * V
-        norms = np.sqrt(np.cumsum(sq.astype(np.float64), axis=1)[:, -1])
-        Vn = V.astype(np.float64) / np.maximum(norms, 1e-300)[:, None]
-        seg_new = np.empty(m, dtype=bool)
-        seg_new[0] = True
-        seg_new[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
-        starts = np.flatnonzero(seg_new)
-        ends = np.append(starts[1:], m)
-        out: list[tuple] = []
-        cut = threshold - _COS_MARGIN
-        blk = 4096  # bounds the matmul tile at ~128 MB f64 per task
-        for s, e in zip(starts, ends):
-            if e - s < 2:
-                continue
-            for i0 in range(s, e, blk):
-                for j0 in range(i0, e, blk):
-                    sims = Vn[i0: min(i0 + blk, e)] @ Vn[j0: min(j0 + blk, e)].T
-                    hit = sims >= cut
-                    if i0 == j0:
-                        hit &= ~np.tri(*hit.shape, dtype=bool)  # strict upper
-                    ii, jj = np.nonzero(hit)
-                    if not len(ii):
-                        continue
-                    gi, gj = i0 + ii, j0 + jj
-                    prods = (V[gi] * V[gj]).astype(np.float64)
-                    dots = np.cumsum(prods, axis=1)[:, -1]
-                    cos = dots / (norms[gi] * norms[gj])
-                    out.append((ids[gi], ids[gj], cos))
-        if not out:
-            return empty
-        return pa.table(
-            {"a": pa.array(np.concatenate([o[0] for o in out]), pa.int64()),
-             "b": pa.array(np.concatenate([o[1] for o in out]), pa.int64()),
-             "cosine": pa.array(np.concatenate([o[2] for o in out]), pa.float64())}
-        )
-
-    grouped = bands.withColumn(
-        "_grp", F.pmod(F.xxhash64("band", "bucket"), F.lit(n_groups))
-    )
-    pairs = grouped.groupBy("_grp").applyInArrow(verify, _PAIR_COS_SCHEMA)
-    # a pair surfacing from k tables carries the identical exact cosine
-    return pairs.dropDuplicates(["a", "b"])
+    return score
 
 
 def near_duplicates_cosine(
@@ -668,20 +610,22 @@ def near_duplicates_cosine(
     (recall ≈ 1-(1-p)^L, see lsh_bands); false positives cost only an
     exact-cosine verification, never a wrong answer. Round-6 shape:
     the vector rides the banding rows (O(n x L), linear) and each
-    bucket verifies in place (``_bucket_pairs_cosine``) instead of
-    emitting candidate (a, b) rows and joining the vector payload back
-    per pair — at the 40k-vector bench scale the join shape shuffled
+    bucket verifies in place (``bucket_local_pairs`` with
+    ``_cosine_score``) instead of emitting candidate (a, b) rows and
+    joining the vector payload back per pair — at the 40k-vector bench scale the join shape shuffled
     29M candidate rows to keep 20k. Emitted cosines are bit-identical
     to cosine_pairs_exact (same products, same fold order, same
     9-decimal rounding applied here), so the surviving pair set is
     unchanged. No global sort: output is a pair SET (callers order if
     needed)."""
+    from sparkval.pipeline.dedup import bucket_local_pairs
+
     b = lsh_bands(
         embeddings, id_col, vec_col, n_planes, n_tables, dim, keep_vec=True
     )
-    exact = _bucket_pairs_cosine(b, id_col, vec_col, threshold)
+    exact = bucket_local_pairs(b, id_col, vec_col, _cosine_score(threshold))
     return exact.select(
-        "a", "b", F.round("cosine", 9).alias("cosine")
+        "a", "b", F.round("score", 9).alias("cosine")
     ).filter(F.col("cosine") >= threshold)
 
 
@@ -921,7 +865,7 @@ def bit_lsh_near_dups(
     Scale shape (round 6): band projection is a map-only expression;
     the vector rides the banding rows (O(n x bands), linear) and each
     (band, bucket) verifies IN PLACE via the shared bucket-local
-    kernel (``_bucket_pairs_cosine``) instead of emitting candidate
+    skeleton (``bucket_local_pairs``) instead of emitting candidate
     (a, b) rows and joining the vector payload back per pair — with
     2^band_bits buckets per band the candidate join was
     O(n^2 x bands / 2^band_bits) rows (~400M at 40k vectors; the join
@@ -931,13 +875,15 @@ def bit_lsh_near_dups(
     float64 fold bit-for-bit, so the verify still matches the float64
     SQL oracle exactly.
     """
+    from sparkval.pipeline.dedup import bucket_local_pairs
+
     dbl = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
     bands = bit_lsh_bands(dbl, id_col, vec_col, n_bands, band_bits, keep_vec=True)
-    exact = _bucket_pairs_cosine(bands, id_col, vec_col, threshold)
+    exact = bucket_local_pairs(bands, id_col, vec_col, _cosine_score(threshold))
     return exact.select(
-        "a", "b", F.round("cosine", 9).alias("cosine")
+        "a", "b", F.round("score", 9).alias("cosine")
     ).filter(F.col("cosine") >= threshold)
 
 

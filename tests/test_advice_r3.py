@@ -103,7 +103,7 @@ def test_minhash_materialize_false_leaves_cache_to_caller(spark):
     )
     out = near_duplicates_minhash(docs, threshold=0.5, materialize=False)
     # lazy: the pair dedup + threshold filter still sit above the
-    # (checkpointed) bucket-verify sweep — a materialize=True result
+    # bucket-verify sweep — a materialize=True result
     # would have collapsed to a bare scan of checkpointed RDD blocks
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Aggregate" in plan, plan  # the dropDuplicates

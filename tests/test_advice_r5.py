@@ -94,30 +94,66 @@ def test_sketches_accept_non_string_values(spark):
     assert list(a) == list(b)
 
 
-def test_minhash_hot_bucket_block_pairs_match_normal_path(spark, monkeypatch):
-    """The stage-2 block-pair decomposition for oversized buckets must
-    emit EXACTLY the pair set (and estimates) of the single-task path:
-    force every bucket through it by shrinking the cap, and compare
-    against the default run on the same corpus."""
-    from sparkval.pipeline import dedup
+def _lsh_family_inputs(spark):
+    """Per family: (input DataFrame, near-dup call, score column). Each
+    input holds near-dup cliques big enough to exceed a shrunk hot
+    cap, and one id that appears twice with the same payload, so an
+    unmasked kernel would emit an (id, id) pair."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from sparkval.pipeline import dedup, similarity
 
     rows = []
     base = "the quick brown fox jumps over the lazy dog again and again "
     for i in range(40):
         rows.append((i, base + f"tail {i % 4}"))           # 4 near-dup cliques
         rows.append((1000 + i, base + f"tail {i % 4} !"))  # near copies
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    rows.append(rows[0])                                    # repeated id
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    normal = {
-        (r["a"], r["b"]): r["jaccard_est"]
-        for r in dedup.near_duplicates_minhash(df, threshold=0.5).collect()
+    rng = np.random.default_rng(7)
+    centers = rng.normal(size=(4, 64))
+    vecs = [(i, [float(v) for v in centers[i % 4] + 1e-3 * rng.normal(size=64)])
+            for i in range(40)]
+    vecs += [(100 + i, [float(v) for v in rng.normal(size=64)]) for i in range(40)]
+    vecs.append(vecs[0])                                    # repeated id
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    ])
+    embs = spark.createDataFrame(vecs, schema)
+    return {
+        "minhash": (lambda: dedup.near_duplicates_minhash(docs, threshold=0.5),
+                    "jaccard_est"),
+        "simhash": (lambda: dedup.near_duplicates_simhash(docs, max_hamming=3),
+                    "hamming"),
+        "cosine": (lambda: similarity.near_duplicates_cosine(embs, threshold=0.9),
+                   "cosine"),
+        "bit_lsh": (lambda: similarity.bit_lsh_near_dups(embs, threshold=0.9),
+                    "cosine"),
     }
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "cosine", "bit_lsh"])
+def test_hot_bucket_block_pairs_match_normal_path(spark, monkeypatch, family):
+    """The stage-2 block-pair decomposition for oversized buckets must
+    emit EXACTLY the pair set (and scores) of the single-task path:
+    force buckets through it by shrinking the cap (and the tile edge,
+    so large buckets span several tiles), and compare against the
+    default run on the same input. The repeated input id must never
+    pair with itself on either path."""
+    from sparkval.pipeline import dedup
+
+    call, score = _lsh_family_inputs(spark)[family]
+    normal = {(r["a"], r["b"]): r[score] for r in call().collect()}
     assert normal, "fixture must actually produce near-dup pairs"
 
     monkeypatch.setattr(dedup, "_HOT_BUCKET_CAP", 6)
     monkeypatch.setattr(dedup, "_VERIFY_SPLIT", 4)
-    hot = {
-        (r["a"], r["b"]): r["jaccard_est"]
-        for r in dedup.near_duplicates_minhash(df, threshold=0.5).collect()
-    }
+    monkeypatch.setattr(dedup, "_VERIFY_BLOCK", 2)
+    hot = {(r["a"], r["b"]): r[score] for r in call().collect()}
     assert hot == normal
+    assert all(a < b for a, b in normal)
+
+

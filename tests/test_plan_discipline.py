@@ -33,7 +33,7 @@ def test_no_rdd_api_usage():
     # the rule forbids RDD-based COMPUTE (per-row python, no codegen);
     # .rdd.getNumPartitions() is driver-side metadata introspection
     # (partition count only — no job, no row ever crosses to python)
-    # and is the one allowed use (_spread_small_input)
+    # and is the one allowed use (session._spread_small_input)
     offenders = [
         p
         for p, src in _pkg_sources()
