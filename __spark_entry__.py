@@ -1157,13 +1157,16 @@ def q_hll_distinct_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tdigest_lengths_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(bucket, lang) t-digest length quantiles reduced to their
-    SQL-expressible invariants (the sketch itself is approximate, so
-    the oracle pins properties, not values): quantiles monotone in p
-    for every group, within 15% relative of the EXACT per-group
-    percentiles (measured max 7.2% at sf0.01 / 0.6% at sf0.1 — the gap
-    is interpolation convention on small groups, not sketch error),
-    and every document counted in some group."""
+    """Per-(bucket, lang) KLL length quantiles (Spark's
+    kll_sketch_agg_bigint, default k=200) reduced to their
+    SQL-expressible invariants (the sketch is approximate and its
+    compaction randomized, so the oracle pins properties, not values):
+    quantiles monotone in p for every group, within 15% relative of
+    the EXACT per-group percentiles (measured max 7.2% at sf0.01 /
+    2.0% at sf0.1; KLL bounds the rank error at ~1.33% of the group,
+    groups of <= k values are exact, and the rest of the gap is
+    nearest-rank vs interpolated percentiles), and every document
+    counted in some group."""
     from sparkval.config import ValidationConfig
     from sparkval.histograms import prepared_scan
     from sparkval.stats import length_tdigests

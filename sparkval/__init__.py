@@ -5,7 +5,7 @@ A from-scratch re-expression of imazen/butteraugli's capabilities
 precompute, bounded-memory strip execution) as a data-validation engine
 over source-code corpus tables:
 
-- per-partition column stats (null/length/entropy, t-digest, HyperLogLog)
+- per-partition column stats (null/length/entropy, KLL quantiles, HyperLogLog)
 - uniqueness on (repo, path, commit)
 - referential integrity commit -> repo
 - distribution-drift checks: butteraugli's multi-scale psychovisual

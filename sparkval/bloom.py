@@ -1,7 +1,7 @@
 """Bloom filter kernel (numpy/python) — the membership monoid.
 
 Fifth member of the engine's mergeable-sketch family (histogram
-partials, t-digest, HLL, count-min): per-task bit arrays OR together
+partials, KLL, HLL, count-min): per-task bit arrays OR together
 into any rollup, so a persisted per-partition sketch table answers
 "was this value ever seen in any group union" without rescanning.
 Same StripReducer partial/merge discipline (strip.rs:126-209) as the

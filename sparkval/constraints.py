@@ -856,7 +856,7 @@ def partition_fingerprints(
     the whole table (bit_xor is associative-commutative, min/max/sum
     likewise) — persist per-partition rows once and every future
     reconciliation of any slice union is a kilobyte fold, no rescan.
-    The same partial/merge shape as the histogram, t-digest, HLL and
+    The same partial/merge shape as the histogram, KLL, HLL and
     KMV monoids; `merge == whole` is pinned by a pytest parity test.
 
     Rows whose ``part_col`` is NULL form their own partition (groupBy

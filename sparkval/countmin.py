@@ -1,7 +1,7 @@
 """Count-min sketch kernel (numpy/python) — the heavy-hitter monoid.
 
 Fourth member of the engine's mergeable-sketch family (histogram
-partials, t-digest, HLL): per-task sketches sum elementwise into any
+partials, KLL, HLL): per-task sketches sum elementwise into any
 rollup, so a persisted per-partition sketch table answers "top terms
 over any group union" without rescanning the corpus. The reference's
 StripReducer partial/merge discipline (strip.rs:126-209) applied to

@@ -1,7 +1,7 @@
 """K-minimum-values (KMV) sketch kernel — the set-overlap monoid.
 
 Sixth member of the engine's mergeable-sketch family (histogram
-partials, t-digest, HLL, count-min, Bloom): keep the ``k`` smallest
+partials, KLL, HLL, count-min, Bloom): keep the ``k`` smallest
 distinct 32-bit hashes of a value set. Merging is union-then-k-
 smallest (associative, commutative, idempotent), so per-task partials
 roll up to any group union, and — unlike HLL — a KMV sketch supports

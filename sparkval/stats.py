@@ -6,14 +6,22 @@ percentile_approx, approx_count_distinct (Spark's native HLL++).
 Shannon entropy over the byte-frequency vector is computed with
 built-in higher-order array functions — JVM-side, no UDF.
 
-The t-digest length sketch is the only Python: map-side partial
-digests (mapInPandas, numpy) merged per key in applyInPandas —
-the StripReducer shape (strip.rs:126-209) with a custom monoid.
+The length-quantile sketch is Spark's built-in KLL
+(kll_sketch_agg_bigint): a JVM partial+final aggregate with no
+Python worker, whose rank error is bounded (~1.33% of n per quantile
+at the default k=200, 99% confidence) but randomized, so quantiles
+of groups larger than k may differ from run to run.
+
+The count-min, Bloom and KMV monoids keep their numpy kernels
+(their oracles replay the exact hash chains) behind one shared path:
+_sketch_partials (mapInPandas per task) and _sketch_rollup
+(applyInPandas per group) — the StripReducer shape
+(strip.rs:126-209) with a custom monoid.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -21,7 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from sparkval import tdigest
 from sparkval.config import ValidationConfig
 from sparkval.histograms import prepared_scan
 from sparkval.session import _spread_small_input
@@ -102,71 +109,48 @@ def per_repo_stats(corpus: DataFrame, salt_buckets: int = 8) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# t-digest length sketch: mapInPandas partials -> applyInPandas merge
+# KLL length sketch: Spark's built-in partial+final aggregate
 # --------------------------------------------------------------------------
 
-_PARTIAL_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo_bucket", T.IntegerType(), False),
-        T.StructField("lang", T.StringType(), False),
-        T.StructField("digest", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
-_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo_bucket", T.IntegerType(), False),
-        T.StructField("lang", T.StringType(), False),
-        T.StructField("len_tdigest", T.ArrayType(T.DoubleType()), False),
-        T.StructField("len_p50", T.DoubleType(), False),
-        T.StructField("len_p90", T.DoubleType(), False),
-        T.StructField("len_p99", T.DoubleType(), False),
-    ]
-)
-
-
 def length_tdigests(corpus: DataFrame, config: ValidationConfig) -> DataFrame:
-    """Per-(repo_bucket, lang) t-digest of content lengths.
+    """Per-(repo_bucket, lang) KLL sketch of content lengths plus its
+    p50/p90/p99 (``len_sketch``, ``len_p50``, ``len_p90``,
+    ``len_p99``).
 
-    Partial digests collapse each Arrow batch to ~100 centroids per
-    key, so the shuffle carries ~1.6 KB per (task, key) instead of
-    raw lengths — mergeable sketch, same scale story as histograms.
+    One JVM aggregate: kll_sketch_agg_bigint (default k=200) runs as
+    a map-side partial + final ObjectHashAggregate, so the shuffle
+    carries one kilobyte-sized binary sketch per (task, key) and no
+    Python worker runs. ``len_sketch`` is a mergeable monoid
+    (kll_merge_agg_bigint), the same role hll_sketch_agg plays in
+    distinct_sketches.
+
+    Accuracy: KLL bounds the RANK error of each quantile at ~1.33% of
+    the group's count (k=200, 99% confidence), whatever the
+    distribution. Compaction is randomized, so a group with more than
+    k values can return a different (equally bounded) quantile from
+    run to run; a group with <= k values is exact, and every quantile
+    is an observed length. A group whose contents are all null has
+    null quantiles.
     """
-    n_buckets = config.n_repo_buckets
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for (b, lg), grp in pdf.groupby(["_b", "_l"], sort=False):
-                d = tdigest.digest_from_values(grp["_len"].dropna().to_numpy(dtype=np.float64))
-                out.append({"repo_bucket": int(b), "lang": lg, "digest": d})
-            yield pd.DataFrame(out)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d = tdigest.merge_digests([np.asarray(x) for x in pdf["digest"]])
-        p50, p90, p99 = tdigest.quantile(d, np.array([0.5, 0.9, 0.99]))
-        return pd.DataFrame(
-            [
-                {
-                    "repo_bucket": int(key[0]),
-                    "lang": key[1],
-                    "len_tdigest": d,
-                    "len_p50": p50,
-                    "len_p90": p90,
-                    "len_p99": p99,
-                }
-            ]
+    sketch = F.col("len_sketch")
+    # an empty sketch (all-null group) is not a valid quantile input
+    nonempty = F.kll_sketch_get_n_bigint(sketch) > 0
+    return (
+        prepared_scan(corpus, config.n_repo_buckets)
+        .groupBy(F.col("_b").alias("repo_bucket"), F.col("_l").alias("lang"))
+        .agg(F.kll_sketch_agg_bigint("_len").alias("len_sketch"))
+        .select(
+            "repo_bucket",
+            "lang",
+            "len_sketch",
+            *[
+                F.when(nonempty, F.kll_sketch_get_quantile_bigint(sketch, F.lit(q)))
+                .cast("double")
+                .alias(name)
+                for q, name in ((0.5, "len_p50"), (0.9, "len_p90"), (0.99, "len_p99"))
+            ],
         )
-
-    # per-row prep (bucket, lang-norm, length) is JVM-side codegen
-    part = (
-        prepared_scan(corpus, n_buckets)
-        .select("_b", "_l", "_len")
-        .mapInPandas(partials, _PARTIAL_DIGEST_SCHEMA)
     )
-    return part.groupBy("repo_bucket", "lang").applyInPandas(merge, _DIGEST_SCHEMA)
 
 
 def distinct_sketches(
@@ -180,7 +164,7 @@ def distinct_sketches(
     ANY rollup (per-bucket, per-lang, global, arbitrary unions) with
     hll_union_agg over kilobyte blobs instead of rescanning 100 TB —
     the same commit-partials-finalize-narrow shape as the histogram
-    and t-digest monoids.
+    and KLL monoids.
     """
     group_cols = group_cols if group_cols is not None else ["lang"]
     return corpus.groupBy(*group_cols).agg(
@@ -378,39 +362,36 @@ def psi_report(
 
 
 # --------------------------------------------------------------------------
-# count-min heavy-hitter sketches: the 4th mergeable monoid
+# Python sketch monoids (count-min, Bloom, KMV): one partial path, one
+# rollup path; each monoid supplies only its build and combine functions
 # --------------------------------------------------------------------------
 
-def countmin_sketches(
+def _sketch_partials(
     df: DataFrame,
-    col: str,
-    group_cols: list[str] | None = None,
-    depth: int = 4,
-    width: int = 2048,
+    value,
+    group_cols: list[str],
+    build: Callable[[pd.Series], dict],
+    fields: list[T.StructField],
 ) -> DataFrame:
-    """Per-group count-min sketches over a categorical column — the
-    heavy-hitter companion to the histogram/t-digest/HLL monoids:
-    per-task partial sketches (mapInPandas, numpy) sum elementwise in
-    an applyInPandas merge, so persisted sketches answer frequency
-    queries over ANY group rollup without rescanning. Shuffle volume
-    is depth*width longs (~64 KB at the 4x2048 default) per (task,
-    group) — never a row per occurrence. Hashing is per distinct
-    value per batch (pre-aggregated with value_counts), and the hash
-    chain (md5 prefix + mod-prime mixing, sparkval.countmin) is
-    engine-replayable, so estimates carry a FULL value oracle."""
-    from sparkval import countmin
+    """Per-task partial sketches, one row per (Arrow batch, group):
+    ``build`` gets the group's non-null values and returns the dict
+    that fills ``fields``. Shuffle volume downstream is one sketch per
+    (task, group), never a row per value.
 
-    group_cols = group_cols if group_cols is not None else ["lang"]
+    The RAW input is spread first (no-op whenever partitions >= slots,
+    see _spread_small_input), so an expensive value expression (e.g.
+    shingles over text) evaluates on every core. The value is cast to
+    STRING (no-op for string inputs): the Python hashers encode utf-8
+    and the codegen probe expressions hash the same string bytes, so a
+    non-string column neither crashes the executor nor disagrees with
+    the probe side (ADVICE r5)."""
     if not group_cols:
         raise ValueError("group_cols must be non-empty; roll up to "
-                         "global with merge_countmin(sketches, [])")
-    fields = [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
+                         "global with the monoid's merge_*(sketches, [])")
+    value = F.col(value) if isinstance(value, str) else value
     schema = T.StructType(
-        fields
-        + [
-            T.StructField("sketch", T.ArrayType(T.LongType()), False),
-            T.StructField("n_values", T.LongType(), False),
-        ]
+        [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
+        + fields
     )
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -420,40 +401,81 @@ def countmin_sketches(
             out = []
             for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
                 key = key if isinstance(key, tuple) else (key,)
-                vc = grp[col].dropna().value_counts()
-                sk = countmin.empty_sketch(depth, width)
-                countmin.update(
-                    sk, vc.index.to_numpy(), vc.to_numpy(), depth, width
-                )
-                out.append(
-                    dict(zip(group_cols, key))
-                    | {"sketch": sk, "n_values": int(vc.sum())}
-                )
+                out.append(dict(zip(group_cols, key)) | build(grp["_v"].dropna()))
             yield pd.DataFrame(out)
 
+    return (
+        _spread_small_input(df)
+        .select(*group_cols, value.cast("string").alias("_v"))
+        .mapInPandas(partials, schema)
+    )
+
+
+def _sketch_rollup(
+    sketches: DataFrame,
+    group_cols: list[str] | None,
+    combine: Callable[[pd.DataFrame], dict],
+    fields: list[T.StructField],
+) -> DataFrame:
+    """Merge sketch rows per ``group_cols`` (global with ``[]``):
+    ``combine`` folds one group's rows into the dict that fills
+    ``fields``. Every monoid op here (elementwise sum, OR,
+    union-then-k-smallest) is associative, commutative and
+    deterministic, so the grouping never changes the result."""
+    group_cols = group_cols or []
+    tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
+    keys = group_cols or ["_g"]
+    schema = T.StructType(
+        [T.StructField(c, tmp.schema[c].dataType, True) for c in keys] + fields
+    )
+
     def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import countmin as cm
+        return pd.DataFrame([dict(zip(keys, key)) | combine(pdf)])
 
-        merged = cm.merge(pdf["sketch"])
-        return pd.DataFrame(
-            [
-                dict(zip(group_cols, key))
-                | {"sketch": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
+    out = tmp.groupBy(*keys).applyInPandas(merge, schema)
+    return out.drop("_g") if not group_cols else out
 
-    # spread a few-partition input before the Python sketch kernel
-    # (no-op whenever partitions >= slots — see _spread_small_input).
-    # The value column is cast to STRING (no-op for string inputs):
-    # the Python hasher encodes utf-8 and the codegen estimate expr
-    # hashes the string bytes, so a non-string column would either
-    # crash the executor (AttributeError in term_hash) or disagree
-    # with the expression side — the cast aligns both by
-    # construction (ADVICE r5)
-    part = _spread_small_input(
-        df.select(*group_cols, F.col(col).cast("string").alias(col))
-    ).mapInPandas(partials, schema)
-    return part.groupBy(*group_cols).applyInPandas(merge, schema)
+
+_COUNTMIN_FIELDS = [
+    T.StructField("sketch", T.ArrayType(T.LongType()), False),
+    T.StructField("n_values", T.LongType(), False),
+]
+_BLOOM_FIELDS = [
+    T.StructField("filter", T.ArrayType(T.LongType()), False),
+    T.StructField("n_values", T.LongType(), False),
+]
+_KMV_FIELDS = [T.StructField("sketch", T.ArrayType(T.LongType()), False)]
+
+
+def countmin_sketches(
+    df: DataFrame,
+    col: str,
+    group_cols: list[str] | None = None,
+    depth: int = 4,
+    width: int = 2048,
+) -> DataFrame:
+    """Per-group count-min sketches over a categorical column — the
+    heavy-hitter companion to the histogram/KLL/HLL monoids:
+    per-task partial sketches (numpy) sum elementwise in
+    merge_countmin, so persisted sketches answer frequency queries
+    over ANY group rollup without rescanning. Shuffle volume is
+    depth*width longs (~64 KB at the 4x2048 default) per (task,
+    group) — never a row per occurrence. Hashing is per distinct
+    value per batch (pre-aggregated with value_counts), and the hash
+    chain (md5 prefix + mod-prime mixing, sparkval.countmin) is
+    engine-replayable, so estimates carry a FULL value oracle."""
+    from sparkval import countmin
+
+    group_cols = group_cols if group_cols is not None else ["lang"]
+
+    def build(vals: pd.Series) -> dict:
+        vc = vals.value_counts()
+        sk = countmin.empty_sketch(depth, width)
+        countmin.update(sk, vc.index.to_numpy(), vc.to_numpy(), depth, width)
+        return {"sketch": sk, "n_values": int(vc.sum())}
+
+    part = _sketch_partials(df, col, group_cols, build, _COUNTMIN_FIELDS)
+    return merge_countmin(part, group_cols)
 
 
 def merge_countmin(
@@ -462,29 +484,15 @@ def merge_countmin(
     """Roll count-min sketches up to coarser groups (global with
     ``group_cols=[]``) — elementwise sum over kilobyte blobs, the
     monoid op. Same shape as merge_distinct_sketches."""
-    group_cols = group_cols or []
-    tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
-    keys = group_cols or ["_g"]
-    out_fields = [
-        T.StructField(c, tmp.schema[c].dataType, True) for c in keys
-    ] + [
-        T.StructField("sketch", T.ArrayType(T.LongType()), False),
-        T.StructField("n_values", T.LongType(), False),
-    ]
+    from sparkval import countmin
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import countmin as cm
+    def combine(pdf: pd.DataFrame) -> dict:
+        return {
+            "sketch": countmin.merge(pdf["sketch"]),
+            "n_values": int(pdf["n_values"].sum()),
+        }
 
-        merged = cm.merge(pdf["sketch"])
-        return pd.DataFrame(
-            [
-                dict(zip(keys, key))
-                | {"sketch": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
-
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(out_fields))
-    return out.drop("_g") if not group_cols else out
+    return _sketch_rollup(sketches, group_cols, combine, _COUNTMIN_FIELDS)
 
 
 def countmin_estimate_expr(
@@ -500,9 +508,7 @@ def countmin_estimate_expr(
     querying a broadcast sketch costs no Python at all."""
     from sparkval.countmin import P, row_coeffs
 
-    h0 = F.conv(
-        F.substring(F.md5(F.col(term_col).cast("binary")), 1, 8), 16, 10
-    ).cast("long")
+    h0 = bloom_h0_expr(term_col)
     ests = []
     for j, (a, b) in enumerate(row_coeffs(depth)):
         bucket = ((F.lit(a) * h0 + F.lit(b)) % F.lit(P)) % F.lit(width)
@@ -523,69 +529,26 @@ def bloom_filters(
 ) -> DataFrame:
     """Per-group Bloom filters over a value column — the MEMBERSHIP
     monoid (sparkval.bloom) beside the frequency one: per-task
-    partial bit arrays (mapInPandas, numpy) OR together in an
-    applyInPandas merge, so persisted filters answer "seen in ANY
-    group union" without rescanning. Shuffle volume is m_bits/64
-    longs (~128 KB at the 2^20 default) per (task, group) — never a
-    row per value — and the merged filter broadcasts as ONE ROW no
-    matter how many values went in, unlike a distinct-hash-set
-    broadcast that grows with the input. Hashing is per distinct
-    value per batch, engine-replayable (md5 prefix + mod-prime
-    chain), so membership answers carry a FULL value oracle."""
+    partial bit arrays (numpy) OR together in merge_bloom, so
+    persisted filters answer "seen in ANY group union" without
+    rescanning. Shuffle volume is m_bits/64 longs (~128 KB at the
+    2^20 default) per (task, group) — never a row per value — and the
+    merged filter broadcasts as ONE ROW no matter how many values went
+    in, unlike a distinct-hash-set broadcast that grows with the
+    input. Hashing is per distinct value per batch, engine-replayable
+    (md5 prefix + mod-prime chain), so membership answers carry a FULL
+    value oracle."""
     from sparkval import bloom
 
     group_cols = group_cols if group_cols is not None else ["lang"]
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty; roll up to "
-                         "global with merge_bloom(filters, [])")
-    fields = [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
-    schema = T.StructType(
-        fields
-        + [
-            T.StructField("filter", T.ArrayType(T.LongType()), False),
-            T.StructField("n_values", T.LongType(), False),
-        ]
-    )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                vals = grp[col].dropna()
-                f = bloom.empty_filter(m_bits)
-                bloom.add(f, vals.unique(), k, m_bits)
-                out.append(
-                    dict(zip(group_cols, key))
-                    | {"filter": f, "n_values": int(len(vals))}
-                )
-            yield pd.DataFrame(out)
+    def build(vals: pd.Series) -> dict:
+        f = bloom.empty_filter(m_bits)
+        bloom.add(f, vals.unique(), k, m_bits)
+        return {"filter": f, "n_values": len(vals)}
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import bloom as bl
-
-        merged = bl.merge(pdf["filter"])
-        return pd.DataFrame(
-            [
-                dict(zip(group_cols, key))
-                | {"filter": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
-
-    # spread a few-partition input before the Python sketch kernel
-    # (no-op whenever partitions >= slots — see _spread_small_input).
-    # The value column is cast to STRING (no-op for string inputs):
-    # the Python hasher encodes utf-8 and the codegen estimate expr
-    # hashes the string bytes, so a non-string column would either
-    # crash the executor (AttributeError in term_hash) or disagree
-    # with the expression side — the cast aligns both by
-    # construction (ADVICE r5)
-    part = _spread_small_input(
-        df.select(*group_cols, F.col(col).cast("string").alias(col))
-    ).mapInPandas(partials, schema)
-    return part.groupBy(*group_cols).applyInPandas(merge, schema)
+    part = _sketch_partials(df, col, group_cols, build, _BLOOM_FIELDS)
+    return merge_bloom(part, group_cols)
 
 
 def merge_bloom(
@@ -593,29 +556,15 @@ def merge_bloom(
 ) -> DataFrame:
     """Roll Bloom filters up to coarser groups (global with
     ``group_cols=[]``) — elementwise bitwise OR, the monoid op."""
-    group_cols = group_cols or []
-    tmp = filters if group_cols else filters.withColumn("_g", F.lit(0))
-    keys = group_cols or ["_g"]
-    out_fields = [
-        T.StructField(c, tmp.schema[c].dataType, True) for c in keys
-    ] + [
-        T.StructField("filter", T.ArrayType(T.LongType()), False),
-        T.StructField("n_values", T.LongType(), False),
-    ]
+    from sparkval import bloom
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import bloom as bl
+    def combine(pdf: pd.DataFrame) -> dict:
+        return {
+            "filter": bloom.merge(pdf["filter"]),
+            "n_values": int(pdf["n_values"].sum()),
+        }
 
-        merged = bl.merge(pdf["filter"])
-        return pd.DataFrame(
-            [
-                dict(zip(keys, key))
-                | {"filter": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
-
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(out_fields))
-    return out.drop("_g") if not group_cols else out
+    return _sketch_rollup(filters, group_cols, combine, _BLOOM_FIELDS)
 
 
 def bloom_contains_expr(
@@ -637,16 +586,19 @@ def bloom_contains_expr(
 
 
 def bloom_h0_expr(term) -> F.Column:
-    """The base hash of the Bloom chain (first 8 md5 hex chars as a
-    long) as its own expression — split out so hot probe paths can
-    evaluate the md5 ONCE per term (via transform) instead of once
-    per bit test: inside a higher-order lambda Spark does not
-    common-subexpression-eliminate, so the composed form pays k
-    md5+conv per term."""
+    """The base hash of the Bloom and count-min chains (first 8 md5
+    hex chars as a long) as its own expression — split out so hot
+    probe paths can evaluate the md5 ONCE per term (via transform)
+    instead of once per bit test: inside a higher-order lambda Spark
+    does not common-subexpression-eliminate, so the composed form pays
+    k md5+conv per term. The term is cast to STRING before its bytes
+    are hashed, as the build side does (_sketch_partials), so a
+    numeric term hashes its string form; on string input the
+    optimiser drops the extra cast."""
     term = F.col(term) if isinstance(term, str) else term
-    return F.conv(F.substring(F.md5(term.cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    return F.conv(
+        F.substring(F.md5(term.cast("string").cast("binary")), 1, 8), 16, 10
+    ).cast("long")
 
 
 def bloom_h0_contains_expr(
@@ -679,9 +631,9 @@ def kmv_sketches(
     """Per-group KMV (k-minimum-values) sketches over a value column
     or expression — the SET-OVERLAP monoid (sparkval.kmv): per-task
     partials keep the k smallest distinct md5-prefix hashes and merge
-    by union-then-k-smallest, so persisted sketches answer BOTH
-    distinct-count and cross-group Jaccard questions without
-    rescanning — the estimate group_overlap_matrix's exact
+    by union-then-k-smallest in merge_kmv, so persisted sketches
+    answer BOTH distinct-count and cross-group Jaccard questions
+    without rescanning — the estimate group_overlap_matrix's exact
     shingle-join cannot give at fleet scale. Shuffle volume is <= k
     longs (~2 KB at the default) per (task, group). ``col`` may be a
     column name or a string-typed Column (e.g. a shingle expression
@@ -691,48 +643,12 @@ def kmv_sketches(
     from sparkval import kmv
 
     group_cols = group_cols if group_cols is not None else ["lang"]
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty; roll up to "
-                         "global with merge_kmv(sketches, [])")
-    value = F.col(col) if isinstance(col, str) else col
-    fields = [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
-    schema = T.StructType(
-        fields + [T.StructField("sketch", T.ArrayType(T.LongType()), False)]
-    )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                vals = grp["_v"].dropna().unique()
-                out.append(
-                    dict(zip(group_cols, key))
-                    | {"sketch": kmv.sketch_of(vals, k)}
-                )
-            yield pd.DataFrame(out)
+    def build(vals: pd.Series) -> dict:
+        return {"sketch": kmv.sketch_of(vals.unique(), k)}
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import kmv as km
-
-        return pd.DataFrame(
-            [
-                dict(zip(group_cols, key))
-                | {"sketch": km.merge(pdf["sketch"], k)}
-            ]
-        )
-
-    # the value may be an expensive expression (e.g. shingles over
-    # text): spread the RAW input first so it evaluates on every
-    # core, not on 1-2 scan partitions (no-op at scale)
-    # string cast: same hashing-alignment contract as
-    # countmin_sketches (no-op for string values)
-    part = _spread_small_input(df).select(
-        *group_cols, value.cast("string").alias("_v")
-    ).mapInPandas(partials, schema)
-    return part.groupBy(*group_cols).applyInPandas(merge, schema)
+    part = _sketch_partials(df, col, group_cols, build, _KMV_FIELDS)
+    return merge_kmv(part, group_cols, k)
 
 
 def merge_kmv(
@@ -740,22 +656,12 @@ def merge_kmv(
 ) -> DataFrame:
     """Roll KMV sketches up to coarser groups (global with
     ``group_cols=[]``) — union then k smallest, the monoid op."""
-    group_cols = group_cols or []
-    tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
-    keys = group_cols or ["_g"]
-    out_fields = [
-        T.StructField(c, tmp.schema[c].dataType, True) for c in keys
-    ] + [T.StructField("sketch", T.ArrayType(T.LongType()), False)]
+    from sparkval import kmv
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import kmv as km
+    def combine(pdf: pd.DataFrame) -> dict:
+        return {"sketch": kmv.merge(pdf["sketch"], k)}
 
-        return pd.DataFrame(
-            [dict(zip(keys, key)) | {"sketch": km.merge(pdf["sketch"], k)}]
-        )
-
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(out_fields))
-    return out.drop("_g") if not group_cols else out
+    return _sketch_rollup(sketches, group_cols, combine, _KMV_FIELDS)
 
 
 def kmv_distinct_expr(sketch_col: str = "sketch", k: int = 256) -> F.Column:

@@ -68,9 +68,12 @@ def test_validate_self_releases_previous_fused_cache(spark, corpus_pair):
 
 def test_sketches_accept_non_string_values(spark):
     """A numeric value column must hash (as its string form), not
-    crash the executor with AttributeError in term_hash."""
+    crash the executor with AttributeError in term_hash, and the
+    probe expressions must hash a numeric term the same way."""
     from sparkval.stats import (
+        bloom_contains_expr,
         bloom_filters,
+        countmin_estimate_expr,
         countmin_sketches,
         kmv_sketches,
         merge_countmin,
@@ -92,6 +95,20 @@ def test_sketches_accept_non_string_values(spark):
     a = merge_countmin(cm, []).first()["sketch"]
     b = merge_countmin(cm2, []).first()["sketch"]
     assert list(a) == list(b)
+    # the probe side hashes a numeric term as its string form too:
+    # each v occurs once, and every v is a member of its group filter
+    probes = df.join(
+        cm.withColumnRenamed("n_values", "_n").join(
+            bl.drop("n_values"), "g"
+        ),
+        "g",
+    ).select(
+        countmin_estimate_expr("v").alias("est"),
+        bloom_contains_expr("v").alias("member"),
+    ).collect()
+    assert len(probes) == 60
+    assert all(r["est"] == 1 for r in probes)
+    assert all(r["member"] for r in probes)
 
 
 def _lsh_family_inputs(spark):

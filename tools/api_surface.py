@@ -42,7 +42,6 @@ MODULES = [
     "sparkval.session",
     "sparkval.stats",
     "sparkval.streaming",
-    "sparkval.tdigest",
     "sparkval.bloom",
     "sparkval.countmin",
     "sparkval.kmv",
