@@ -18,14 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # every query starts by loading tables, so draining here bounds
-    # lazily-persisted tables (validate single-scan fused tables) to
-    # the one query in flight — the owner that lazy path otherwise
-    # lacks (ADVICE round 4). Queries must load tables BEFORE building
-    # lazy plans (all do: _t is always the first call).
-    from sparkval.engine import release_scan_caches
-
-    release_scan_caches()
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

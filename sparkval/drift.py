@@ -2,20 +2,22 @@
 
 Plan shape (designed for 10^12 files / 1000 executors):
 
-  snapshot corpus scan ──mapInPandas──> partial hists (tiny)
-        │ shuffle: (repo_bucket, lang, bin) rows only
+  snapshot corpus scan ──mapInArrow──> partial hists (tiny)
+        │ shuffle: partial rows on repo_bucket (applyInPandas merge
+        │ + bucket-wide lang-mix vector)
         ▼
   per-partition hist table (~#buckets x #langs rows, ~3 KB each)
-        │ broadcast join with the baseline hist table
+        │ full outer join with the baseline hist table on
+        │ (repo_bucket, lang) — both sides tiny, so the shuffle is too
         ▼
-  one grouped numpy kernel call per partition row  (mapInPandas)
+  batched numpy kernel over the joined rows  (mapInPandas)
         ▼
   verdict table (score, pnorm_3, verdict, driftmap)
 
 The expensive thing — the corpus scan — happens exactly once; the
 drift kernel itself runs on O(partitions) rows, never on file rows.
 The baseline side is the reference's ButteraugliReference
-(precompute.rs:127-152): computed once, persisted, broadcast to every
+(precompute.rs:127-152): computed once, persisted, joined into every
 comparison. Full-outer join semantics cover partitions that appear or
 vanish between snapshots (all mass appearing/disappearing = max
 drift, naturally).

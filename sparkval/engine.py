@@ -29,30 +29,6 @@ from sparkval.config import ValidationConfig
 from sparkval.drift import drift_verdicts_joined, joined_hists, partition_histograms
 from sparkval.schema import check_corpus_schema
 
-#: fused single-scan tables persisted by validate(single_scan=True) —
-#: both returned DataFrames (verdicts, violations) read them, so the
-#: cache must outlive the call; ownership lives here (the
-#: pipeline.dedup lazy-cache discipline) and release_scan_caches()
-#: drains it.
-_SCAN_CACHES: list[DataFrame] = []
-
-
-def release_scan_caches() -> int:
-    """Unpersist fused scan tables left cached by
-    validate(single_scan=True). Call after consuming a validate
-    result in a long-lived session (the driver entry queries and the
-    bench harness do; clearCache()/session exit also work). Returns
-    the number of tables released."""
-    n = 0
-    while _SCAN_CACHES:
-        df = _SCAN_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped
-            pass
-    return n
-
 
 class ValidationCancelled(RuntimeError):
     """Raised by validate_with_stop when its token was cancelled — the
@@ -115,69 +91,22 @@ class ValidationEngine:
         baseline: DataFrame,
         commits: DataFrame | None = None,
         expected_manifest: DataFrame | None = None,
-        single_scan: bool | None = None,
     ) -> dict[str, DataFrame]:
-        """Full validation of a snapshot against a baseline table.
+        """Full validation of a snapshot against a baseline table: two
+        lazy plans, nothing cached — the violations plan and the
+        histogram scan + scoring plan.
 
         ``expected_manifest``: optional (repo, path, commit,
         content_sha256) table from a reference engine run — enables the
         per-row sha256 invariant check (BASELINE.json input_hint).
 
-        ``single_scan=True`` (round 5): reads the content column ONCE
-        — a fused Arrow kernel emits histogram partials and the narrow
-        per-row check partials (sha256 of EVERY row included) from the
-        same scan (histograms.fused_scan_partials); the fused table
-        (tiny: ~100 B/row) is persisted and both outputs derive from
-        it. Outputs are bit-identical to the classic two-plan shape
-        (parity-tested both ways).
-
-        Default is AUTO, from the measured cost model (sf0.1,
-        local[32], BENCH.md round 5): with ``expected_manifest`` the
-        classic shape hashes every row in a second content pass, so
-        fusing saves that pass (~1.2x faster) -> fused. WITHOUT the
-        manifest the classic violations plan never reads content for
-        non-violating rows (uniqueness shuffles 3 key columns;
-        parquet prunes the rest), so the "second scan" it avoids is
-        mostly free while the fusion pays full-corpus sha256 + the
-        Arrow pass-through (~8% slower) -> classic. The persisted
-        fused table is registered with ``release_scan_caches()``;
-        long-lived sessions call it (or clearCache) after consuming
-        the outputs.
+        The single-content-read form of a full validate is the fused
+        per-unit walk behind ``validate_incremental`` and
+        ``validate_strips(include_violations=True)``; both are
+        bit-identical to this plan (parity-tested).
         """
         check_corpus_schema(snapshot)
         cfg = self.config
-
-        if single_scan is None:
-            single_scan = expected_manifest is not None
-        if single_scan:
-            from sparkval.histograms import (
-                fused_scan_partials,
-                merge_histograms_with_lang,
-                split_fused,
-            )
-
-            # release any fused table a PREVIOUS validate() left cached
-            # before persisting a new one: direct callers in long-lived
-            # sessions otherwise accrete one cached table per call
-            # (ADVICE r5). Unpersist never invalidates an outstanding
-            # result DataFrame — a late consumer just recomputes
-            # uncached.
-            release_scan_caches()
-            fused = fused_scan_partials(snapshot, cfg).persist()
-            _SCAN_CACHES.append(fused)
-            hist_partials, row_partials = split_fused(fused)
-            violations = constraints.violations_from_row_partials(
-                row_partials, commits, expected_manifest
-            )
-            verdicts = self._score_hists(
-                baseline, merge_histograms_with_lang(hist_partials)
-            )
-            return {
-                "verdicts": constraints.deterministic_order(
-                    verdicts, ["repo_bucket", "lang"]
-                ),
-                "violations": violations,
-            }
 
         violations = constraints.all_violations(snapshot, commits)
         if expected_manifest is not None:
@@ -202,7 +131,7 @@ class ValidationEngine:
 
     def _score_hists(self, baseline: DataFrame, snap_hists: DataFrame) -> DataFrame:
         """Join a snapshot hist table against the baseline and score it
-        (shared by validate() and the strip walker — any path that
+        (shared by validate() and the checkpointed walk — any path that
         produced the same hist table gets bit-identical verdicts)."""
         cfg = self.config
         joined = joined_hists(baseline, snap_hists)
@@ -243,7 +172,7 @@ class ValidationEngine:
             return drift_verdicts_joined(joined, cfg, same_col="same_shortcut")
         return drift_verdicts_joined(joined, cfg)
 
-    # -- strip-mode validation ----------------------------------------------
+    # -- checkpointed walk: strip mode and incremental mode ------------------
     def validate_strips(
         self,
         snapshot_path: str,
@@ -260,201 +189,60 @@ class ValidationEngine:
         (strip.rs:227-455, walker strip.rs:491-581) recast to the one
         resource that matters at 100 TB: the input scan.
 
-        The snapshot table's parquet files are split into ``n_strips``
-        contiguous strips. Each strip is scanned ONCE and its partial
-        histograms (the StripReducer partial-agg state,
-        strip.rs:126-209 — a mergeable monoid, so any strip grouping
-        yields bit-identical final histograms) are committed to
-        ``checkpoint_dir`` as their own atomic write job. The
+        The snapshot's data files are split into ``n_strips``
+        contiguous strips, and each strip is one unit of the
+        checkpointed walk (``_walk``): scanned ONCE, its partials
+        committed to ``checkpoint_dir`` as their own atomic write job,
+        skipped ENTIRELY (scan included) by any later run that finds
+        its commit marker. Resume cost is proportional to the remaining
+        input fraction (measured in BENCH.md), unlike marker-table
+        resume whose lineage still rescans everything. The
         cancellation token is polled at strip boundaries
         (strip.rs:510-513) and fences mid-strip jobs via the job
-        group; a cancelled strip's write never commits. A resumed run
-        skips committed strips ENTIRELY — including their scan — so
-        resume cost is proportional to the remaining input fraction
-        (measured in BENCH.md), unlike marker-table resume whose
-        lineage still rescans everything.
+        group; a cancelled strip's write never commits.
+
+        A strip's id hashes its files' (uri, size, mtime) and the
+        ValidationConfig, so a strip whose files were rewritten in
+        place, or that was committed under another config, is
+        recomputed rather than reused. The finalize reads ONLY this
+        run's strip ids: strips of another n_strips, another file set
+        or another config under a reused checkpoint_dir are pruned,
+        never merged (they stay in place; another run may own them).
 
         ``checkpoint_dir`` may live on ANY Hadoop filesystem (file://,
-        hdfs://, s3a://, or a bare local path): commit probes go
-        through the FileSystem API, never driver-local os.path — on
-        the 100 TB deployment's object store a local probe would
-        silently see nothing and resume would degrade to full
-        recompute (round-3 verdict #2). Note the usual S3 caveat: the
-        parquet _SUCCESS commit marker is only atomic-rename-backed on
-        real filesystems; on S3A the committer still guarantees
+        hdfs://, s3a://, or a bare local path): listing and commit
+        probes go through the FileSystem API, never driver-local
+        os.path. On S3A the parquet _SUCCESS marker is not
+        rename-backed, but the committer still guarantees
         marker-implies-complete, which is all resume needs.
 
-        The finalize merge reads ONLY this run's strip ids (partition
-        filter on the ``strip`` directory column): a reused
-        checkpoint_dir holding strips from a different n_strips or an
-        older snapshot file set cannot double-count histogram mass
-        (round-3 ADVICE, medium). Foreign committed strips are left in
-        place (another run may own them) — they're pruned, not read.
+        Verdict-only runs (the default) commit the histogram partials
+        under ``partials/``; a strip already committed by a full run
+        under ``fused_partials/`` is reused, its kind='h' rows being
+        exactly those partials. ``include_violations=True`` makes
+        strip mode a FULL validate: each strip commits ONE fused table
+        (``fused_partials/``, histograms.fused_scan_partials,
+        partitioned by ``kind``) holding the histogram partials AND
+        the narrow per-row check partials (key, sha256, null-detail —
+        ~100 B/row) from a single pass over the strip's content, and
+        the finalize derives every row-level violation (uniqueness with
+        exact global counts, null_required, referential vs
+        ``commits``, sha256 manifest vs ``expected_manifest``) from
+        them with narrow-only joins. The verdict-only layout exists
+        because it skips that per-row sha256.
 
-        Finalize = merge all strips' partials + the single kernel+join
-        stage; verdicts are identical to validate() (parity-tested).
-
-        ``include_violations=True`` makes strip mode a FULL validate
-        (beyond the reference, whose strip API returns only
-        score/pnorm, strip.rs:601-905): each strip commits ONE fused
-        partial table (``fused_partials/strip=<sid>``, partitioned by
-        ``kind``) holding both the histogram partials and the NARROW
-        per-row check partials (key, sha256, null-detail — ~100 B/row)
-        from a SINGLE pass over the strip's content
-        (histograms.fused_scan_partials — round 5; previously two
-        passes/two write jobs per strip). The finalize derives ALL
-        row-level violations (uniqueness with exact global counts,
-        null_required, referential vs ``commits``, sha256 manifest vs
-        ``expected_manifest``) from the merged kind='r' partials with
-        narrow-only joins — content is never rescanned after the strip
-        commits. Each strip's content is read ONCE total; resume skips
-        committed strips entirely. The single write job also makes the
-        strip commit atomic by construction: there is no
-        half-committed two-table state to detect (one _SUCCESS marker
-        per strip). Checkpoint dirs written by the pre-round-5 layout
-        (separate ``partials``/``row_partials`` trees) are not read by
-        full-validate runs — their strips recompute into the fused
-        layout; verdict-only runs (``include_violations=False``) keep
-        the classic ``partials`` layout and remain compatible both
-        ways.
+        Verdicts (and violations) are identical to validate()
+        (parity-tested). With ``stop`` the outputs are materialized
+        (localCheckpoint) inside its job group.
 
         ``on_strip(i, n, skipped)`` is an optional progress hook (the
         per-strip progress callback a monitoring UI would attach).
         """
-        import hashlib
-
-        from sparkval.histograms import partial_histograms
-        from sparkval.io import fs_exists, uri_join
-
-        spark = baseline.sparkSession
-        if stop is not None and stop.cancelled:
-            raise ValidationCancelled(stop.reason)
-        sc = spark.sparkContext
-
-        probe = spark.read.parquet(snapshot_path)
-        check_corpus_schema(probe)
-        files = sorted(probe.inputFiles())
-        if not files:
-            raise ValueError(f"no parquet files under {snapshot_path}")
-        n_strips = max(1, min(n_strips, len(files)))
-        bounds = [
-            (len(files) * i // n_strips, len(files) * (i + 1) // n_strips)
-            for i in range(n_strips)
-        ]
-        sids = [
-            hashlib.sha1("\n".join(files[lo:hi]).encode()).hexdigest()[:16]
-            for lo, hi in bounds
-        ]
-
-        if stop is not None:
-            sc.setJobGroup(stop.group, "sparkval strip validation",
-                           interruptOnCancel=True)
-        # full-validate runs commit ONE fused table per strip (single
-        # content pass, single atomic write); verdict-only runs write
-        # the classic hist-partials layout but RESUME from either tree
-        # (a completed full validate's fused commits satisfy a later
-        # verdict-only run — its hist rows are a superset; review
-        # round 5). The reverse direction recomputes: a fused commit
-        # needs row partials the classic tree never wrote.
-        tree = "fused_partials" if include_violations else "partials"
-        fused_sids: list[str] = []  # verdict-only: strips resumed from fused
-        try:
-            for i, (lo, hi) in enumerate(bounds):
-                strip_files = files[lo:hi]
-                sid = sids[i]
-                strip_dir = uri_join(checkpoint_dir, tree, f"strip={sid}")
-                done = fs_exists(spark, uri_join(strip_dir, "_SUCCESS"))
-                if not done and not include_violations:
-                    fused_dir = uri_join(
-                        checkpoint_dir, "fused_partials", f"strip={sid}"
-                    )
-                    if fs_exists(spark, uri_join(fused_dir, "_SUCCESS")):
-                        fused_sids.append(sid)
-                        done = True
-                if on_strip is not None:
-                    on_strip(i, n_strips, done)
-                if done:
-                    continue
-                if stop is not None and stop.cancelled:  # strip boundary poll
-                    raise ValidationCancelled(stop.reason)
-                strip_df = spark.read.schema(probe.schema).parquet(*strip_files)
-                # one write job per strip: the parquet commit protocol
-                # makes the strip atomic (a cancelled job commits nothing)
-                if include_violations:
-                    from sparkval.histograms import fused_scan_partials
-
-                    fused_scan_partials(strip_df, self.config).write.mode(
-                        "overwrite"
-                    ).partitionBy("kind").parquet(strip_dir)
-                else:
-                    partial_histograms(strip_df, self.config).write.mode(
-                        "overwrite"
-                    ).parquet(strip_dir)
-
-            if stop is not None and stop.cancelled:
-                raise ValidationCancelled(stop.reason)
-            # partition-discover strip=<sid> dirs, then PRUNE to this
-            # run's sid set — stale strips under a reused checkpoint
-            # dir are never opened (partition filter), never merged
-            from sparkval.histograms import PARTIAL_SCHEMA, merge_histograms_with_lang
-
-            hist_names = [f.name for f in PARTIAL_SCHEMA.fields]
-            if include_violations:
-                committed = spark.read.parquet(
-                    uri_join(checkpoint_dir, tree)
-                ).filter(F.col("strip").isin(sids))
-                # kind is a partition column: each consumer opens only
-                # its own files
-                hist_rows = committed.filter(F.col("kind") == "h").select(*hist_names)
-            else:
-                classic_sids = sorted(set(sids) - set(fused_sids))
-                parts = []
-                if classic_sids:  # dir exists iff any strip lives there
-                    parts.append(
-                        spark.read.parquet(uri_join(checkpoint_dir, tree))
-                        .filter(F.col("strip").isin(classic_sids))
-                        .select(*hist_names)
-                    )
-                if fused_sids:
-                    parts.append(
-                        spark.read.parquet(uri_join(checkpoint_dir, "fused_partials"))
-                        .filter(
-                            F.col("strip").isin(fused_sids) & (F.col("kind") == "h")
-                        )
-                        .select(*hist_names)
-                    )
-                hist_rows = parts[0]
-                for p in parts[1:]:
-                    hist_rows = hist_rows.unionByName(p)
-            snap_hists = merge_histograms_with_lang(hist_rows)
-            verdicts = constraints.deterministic_order(
-                self._score_hists(baseline, snap_hists), ["repo_bucket", "lang"]
-            )
-            if stop is not None:
-                verdicts = verdicts.localCheckpoint(eager=True)
-            out = {"verdicts": verdicts}
-            if include_violations:
-                violations = constraints.violations_from_row_partials(
-                    committed.filter(F.col("kind") == "r").select(
-                        "repo", "path", "commit", "content_sha256", "null_detail"
-                    ),
-                    commits,
-                    expected_manifest,
-                )
-                if stop is not None:
-                    violations = violations.localCheckpoint(eager=True)
-                out["violations"] = violations
-            return out
-        except ValidationCancelled:
-            raise
-        except Exception as e:
-            if stop is not None and stop.cancelled:
-                raise ValidationCancelled(stop.reason) from e
-            raise
-        finally:
-            if stop is not None:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.interruptOnCancel", None)
+        out, _, _ = self._walk(
+            snapshot_path, baseline, checkpoint_dir, n_strips, include_violations,
+            commits, expected_manifest, stop, on_strip,
+        )
+        return out
 
     def validate_incremental(
         self,
@@ -465,45 +253,83 @@ class ValidationEngine:
         expected_manifest: DataFrame | None = None,
         on_file=None,
     ) -> dict:
-        """Churn-proportional FULL validation: per-DATA-FILE fused
-        partials, content-addressed by (path, size, mtime), cached
-        across runs. A new snapshot of a 100 TB table with 0.1% daily
-        churn rescans 0.1% of the bytes — every unchanged file's
-        partials (histogram rows + the ~100 B/row check partials, the
-        strip-mode monoid at file granularity) are reused from
-        ``cache_dir``; the finalize merges partials for EXACTLY the
-        current file set and derives verdicts + all row-level
-        violations without touching content again.
+        """Churn-proportional FULL validation: the checkpointed walk
+        (``_walk``) with one data file per unit, committing fused
+        partials under ``cache_dir/fused_partials`` that later runs
+        reuse. A new snapshot of a 100 TB table with 0.1% daily churn
+        rescans 0.1% of the bytes — every unchanged file's partials
+        (histogram rows + the ~100 B/row check partials) are reused;
+        the finalize merges partials for EXACTLY the current file set
+        and derives verdicts + all row-level violations without
+        touching content again.
 
-        Addressing is (path, size, mtime) through the FileSystem API
-        (``io.fs_file_statuses``), not path alone: Iceberg-style
-        immutable data files make path addressing sound, but an
-        in-place rewrite (same name, new bytes) still changes
-        size/mtime, so stale reuse is impossible — a hole pure
-        path-hashed strip ids cannot close. Stale cache entries for
-        files no longer in the snapshot are pruned by partition
-        filter (never opened), exactly like stale strips.
+        Units are addressed by (path, size, mtime) through the
+        FileSystem API (``io.fs_file_statuses``) plus the
+        ValidationConfig: an in-place rewrite (same name, new bytes) or
+        a config change recomputes the file instead of serving stale
+        partials. Cache entries for files no longer in the snapshot
+        are pruned by partition filter (never opened).
 
         One write job per CHANGED file (the parquet commit marker is
-        the per-file atomicity fence, as in strip mode) — the right
-        trade when runs are churn-dominated; for an initial bulk
-        build at 10^6+ files, seed the cache with ``validate_strips``
-        granularity instead and let incremental take over from the
-        first delta.
+        the per-file atomicity fence) — the right trade when runs are
+        churn-dominated; the first run over an empty cache pays one
+        job per file.
+
+        ``on_file(i, n, done)`` is called once per data file, before
+        that file's write job if it needs one (``done`` = reused from
+        the cache).
 
         Returns {"verdicts", "violations", "n_files_total",
         "n_files_recomputed", "n_files_reused"}.
         """
+        out, n_files, recomputed = self._walk(
+            snapshot_path, baseline, cache_dir, None, True,
+            commits, expected_manifest, None, on_file,
+        )
+        return {
+            **out,
+            "n_files_total": n_files,
+            "n_files_recomputed": recomputed,
+            "n_files_reused": n_files - recomputed,
+        }
+
+    def _walk(
+        self,
+        snapshot_path: str,
+        baseline: DataFrame,
+        root: str,
+        n_units: int | None,
+        fused: bool,
+        commits: DataFrame | None,
+        expected_manifest: DataFrame | None,
+        stop: CancellationToken | None,
+        on_unit,
+    ) -> tuple[dict[str, DataFrame], int, int]:
+        """The checkpointed walk behind validate_strips and
+        validate_incremental: list the snapshot's data files once, cut
+        them into ``n_units`` contiguous units (None: one file per
+        unit), commit each unit's partials as one atomic write job
+        under ``root`` unless its _SUCCESS marker already exists, then
+        finalize once over exactly this run's unit ids.
+
+        ``fused`` commits fused_scan_partials under ``fused_partials/``
+        and returns violations too; otherwise histogram partials go to
+        ``partials/`` and fused commits of the same unit are reused.
+        Returns (outputs, number of data files, units recomputed)."""
         import hashlib
 
         from sparkval.histograms import (
             PARTIAL_SCHEMA,
             fused_scan_partials,
             merge_histograms_with_lang,
+            partial_histograms,
         )
         from sparkval.io import fs_exists, fs_file_statuses, uri_join
 
         spark = baseline.sparkSession
+        sc = spark.sparkContext
+        if stop is not None and stop.cancelled:
+            raise ValidationCancelled(stop.reason)
         # recursive + hidden-segment-filtered: covers partitionBy /
         # nested data layouts exactly as spark.read.parquet does
         statuses = fs_file_statuses(spark, snapshot_path)
@@ -511,61 +337,102 @@ class ValidationEngine:
             raise ValueError(f"no data files under {snapshot_path}")
         probe = spark.read.parquet(snapshot_path)
         check_corpus_schema(probe)
-        # the cache key must cover EVERYTHING that shapes a partial:
-        # the file's identity AND the config that bucketed/scored it —
-        # otherwise a config change (e.g. n_repo_buckets) would reuse
-        # stale partials with fs_exists happily true (review round 5,
-        # session 3). A config change flips every fid -> clean rebuild.
-        import dataclasses
 
+        # the unit id covers EVERYTHING that shapes a partial: each
+        # file's identity (an in-place rewrite changes size/mtime) AND
+        # the config that bucketed it — a config change flips every id
         cfg_fp = hashlib.sha1(
-            repr(sorted(dataclasses.asdict(self.config).items())).encode()
+            repr(sorted(asdict(self.config).items())).encode()
         ).hexdigest()[:8]
-        fids = {
-            uri: hashlib.sha1(
-                f"{uri}|{size}|{mtime}|{cfg_fp}".encode()
-            ).hexdigest()[:16]
-            for uri, size, mtime in statuses
-        }
-        recomputed = 0
-        for i, (uri, _, _) in enumerate(statuses):
-            fid = fids[uri]
-            fdir = uri_join(cache_dir, "file_partials", f"file={fid}")
-            done = fs_exists(spark, uri_join(fdir, "_SUCCESS"))
-            if on_file is not None:
-                on_file(i, len(statuses), done)
-            if done:
-                continue
-            recomputed += 1
-            fdf = spark.read.schema(probe.schema).parquet(uri)
-            fused_scan_partials(fdf, self.config).write.mode(
-                "overwrite"
-            ).partitionBy("kind").parquet(fdir)
+        n = len(statuses) if n_units is None else max(1, min(n_units, len(statuses)))
+        units = []
+        for i in range(n):
+            files = statuses[len(statuses) * i // n : len(statuses) * (i + 1) // n]
+            key = "\n".join(f"{uri}|{size}|{mtime}" for uri, size, mtime in files)
+            uid = hashlib.sha1(f"{key}|{cfg_fp}".encode()).hexdigest()[:16]
+            units.append((uid, [uri for uri, _, _ in files]))
 
-        committed = spark.read.parquet(
-            uri_join(cache_dir, "file_partials")
-        ).filter(F.col("file").isin(sorted(fids.values())))
-        hist_names = [f.name for f in PARTIAL_SCHEMA.fields]
-        snap_hists = merge_histograms_with_lang(
-            committed.filter(F.col("kind") == "h").select(*hist_names)
-        )
-        verdicts = constraints.deterministic_order(
-            self._score_hists(baseline, snap_hists), ["repo_bucket", "lang"]
-        )
-        violations = constraints.violations_from_row_partials(
-            committed.filter(F.col("kind") == "r").select(
-                "repo", "path", "commit", "content_sha256", "null_detail"
-            ),
-            commits,
-            expected_manifest,
-        )
-        return {
-            "verdicts": verdicts,
-            "violations": violations,
-            "n_files_total": len(statuses),
-            "n_files_recomputed": recomputed,
-            "n_files_reused": len(statuses) - recomputed,
-        }
+        tree = "fused_partials" if fused else "partials"
+        from_fused: list[str] = []  # verdict-only units reused from fused commits
+        if stop is not None:
+            sc.setJobGroup(stop.group, "sparkval strip validation", interruptOnCancel=True)
+        try:
+            recomputed = 0
+            for i, (uid, uris) in enumerate(units):
+                unit_dir = uri_join(root, tree, f"strip={uid}")
+                done = fs_exists(spark, uri_join(unit_dir, "_SUCCESS"))
+                if not done and not fused and fs_exists(
+                    spark, uri_join(root, "fused_partials", f"strip={uid}", "_SUCCESS")
+                ):
+                    from_fused.append(uid)
+                    done = True
+                if on_unit is not None:
+                    on_unit(i, n, done)
+                if done:
+                    continue
+                if stop is not None and stop.cancelled:  # unit boundary poll
+                    raise ValidationCancelled(stop.reason)
+                recomputed += 1
+                unit_df = spark.read.schema(probe.schema).parquet(*uris)
+                # one write job per unit: the parquet commit protocol
+                # makes the unit atomic (a cancelled job commits nothing)
+                if fused:
+                    fused_scan_partials(unit_df, self.config).write.mode(
+                        "overwrite"
+                    ).partitionBy("kind").parquet(unit_dir)
+                else:
+                    partial_histograms(unit_df, self.config).write.mode(
+                        "overwrite"
+                    ).parquet(unit_dir)
+            if stop is not None and stop.cancelled:
+                raise ValidationCancelled(stop.reason)
+
+            # partition-discover strip=<uid> dirs, then PRUNE to this
+            # run's ids: foreign units are never opened, never merged
+            def committed(sub: str, ids: list[str]) -> DataFrame:
+                return spark.read.parquet(uri_join(root, sub)).filter(
+                    F.col("strip").isin(ids)
+                )
+
+            hist_names = [f.name for f in PARTIAL_SCHEMA.fields]
+            is_hist = F.col("kind") == "h"
+            own = [uid for uid, _ in units if uid not in from_fused]
+            parts = []
+            if own:
+                rows = committed(tree, own)
+                parts.append(rows.filter(is_hist) if fused else rows)
+            if from_fused:
+                parts.append(committed("fused_partials", from_fused).filter(is_hist))
+            hist_rows = parts[0].select(*hist_names)
+            for p in parts[1:]:
+                hist_rows = hist_rows.unionByName(p.select(*hist_names))
+            out = {
+                "verdicts": constraints.deterministic_order(
+                    self._score_hists(baseline, merge_histograms_with_lang(hist_rows)),
+                    ["repo_bucket", "lang"],
+                )
+            }
+            if fused:
+                out["violations"] = constraints.violations_from_row_partials(
+                    rows.filter(F.col("kind") == "r").select(
+                        "repo", "path", "commit", "content_sha256", "null_detail"
+                    ),
+                    commits,
+                    expected_manifest,
+                )
+            if stop is not None:
+                out = {k: v.localCheckpoint(eager=True) for k, v in out.items()}
+            return out, len(statuses), recomputed
+        except ValidationCancelled:
+            raise
+        except Exception as e:
+            if stop is not None and stop.cancelled:
+                raise ValidationCancelled(stop.reason) from e
+            raise
+        finally:
+            if stop is not None:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
     # -- cancellable validation ----------------------------------------------
     def validate_with_stop(
@@ -606,16 +473,10 @@ class ValidationEngine:
                     "violations": out["violations"].localCheckpoint(eager=True),
                 }
             out = self.validate(snapshot, baseline, commits, expected_manifest)
-            result = {
+            return {
                 "verdicts": out["verdicts"].localCheckpoint(eager=True),
                 "violations": out["violations"].localCheckpoint(eager=True),
             }
-            # both outputs are materialized above, so any fused scan
-            # table still cached (this call's, or a stale one validate()
-            # did not yet self-release) is done — drain the registry
-            # (review round 5 / ADVICE r5)
-            release_scan_caches()
-            return result
         except ValidationCancelled:
             raise
         except Exception as e:
@@ -649,9 +510,9 @@ class ValidationEngine:
         narrow per-row check partials per strip alongside the
         histogram partials, and a resumed run derives all row-level
         violations from the committed partials without rescanning any
-        committed strip's content (tested: a resume over a corpus
-        whose bytes changed after commit still returns the original
-        violations). Prefer it whenever checkpoint/resume is the
+        committed strip's content (tested: a resume over files whose
+        bytes were overwritten with size and mtime kept still returns
+        the original violations). Prefer it whenever checkpoint/resume is the
         point; this method stays for verdict-only monitoring loops
         where violations are recomputed-per-run by design.
         """
@@ -659,15 +520,7 @@ class ValidationEngine:
 
         spark = snapshot.sparkSession
         done_path = uri_join(checkpoint_dir, "verdicts")
-        # explicit classic shape: this wrapper is called per monitoring
-        # cycle and returns a lazy violations plan with no place to
-        # release a fused persist afterwards — AUTO would leak one
-        # cached table per cycle (review round 5). Callers wanting the
-        # single-scan full validate use validate_strips(
-        # include_violations=True), the documented resumable form.
-        result = self.validate(
-            snapshot, baseline, commits, expected_manifest, single_scan=False
-        )
+        result = self.validate(snapshot, baseline, commits, expected_manifest)
         verdicts = result["verdicts"]
 
         try:

@@ -8,19 +8,22 @@ vector: byte-frequency (256 bins), log2-length (64 bins), and lang mix
 
 Scale design (the part that must survive 100 TB):
 
-1. ``partial_histograms`` — mapInPandas over the scan. Each Arrow
-   batch collapses to at most (#keys-in-batch) rows of packed count
-   vectors. This is the map-side combine: raw content NEVER shuffles.
-   100 TB of content becomes ~(tasks x keys) rows of ~2.6 KB each.
-2. ``merge_histograms`` — posexplode the partial vectors and run a
-   built-in partial+final hash aggregation on (key, bin): Spark's
-   own StripReducer (strip.rs:126-209 analog), whole-stage codegen,
-   no Python. The per-key result reassembles into arrays with
-   array_sort(collect_list(struct(bin, count))).
+1. ``partial_histograms`` — mapInArrow over prepared_scan's JVM-side
+   projection. Each task folds its Arrow batches into at most
+   (#keys-in-task) rows of count vectors, emitted once at task end.
+   This is the map-side combine: raw content NEVER shuffles. 100 TB of
+   content becomes ~(tasks x keys) rows of ~2.6 KB each.
+   ``fused_scan_partials`` is the same kernel with the narrow per-row
+   check columns passed through beside the histogram rows.
+2. ``merge_histograms`` / ``merge_histograms_with_lang`` — one
+   applyInPandas grouped merge (scalar sums, XOR of fingerprints,
+   numpy stack-sums of the vectors; the ``_with_lang`` form keys on
+   repo_bucket and attaches the bucket-wide lang-mix vector in the
+   same shuffle).
 
-The histogram bins are uniform by construction, so the merge stage
-has zero skew even when repos are hot — skew lives only in the
-map stage, where AQE/file-split sizing handles it.
+The merge input is O(tasks x keys) rows whatever the data volume, so
+a hot repo skews only the map stage, where AQE/file-split sizing
+handles it.
 """
 
 from __future__ import annotations
@@ -230,31 +233,15 @@ class _HistAccumulator:
         )
 
 
-def _hist_partial_cols(batch: pa.RecordBatch, n_langs: int) -> dict:
+def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
     """The per-batch histogram-partial kernel over a prepared_scan
     batch whose first four columns are (_key, _fp, _len, _bytes):
     reads the binary column's buffers DIRECTLY (zero copies, zero
     Python bytes objects), groups via np.unique over the JVM int key,
     folds fingerprints with one segmented XOR, scatter-adds length
-    bins, and bincounts content bytes. Shared verbatim by
-    partial_histograms and fused_scan_partials so the two paths can
-    never drift."""
-    ukeys, n_files, nulls, total, bh, lh, fpx = _hist_partial_arrays(batch, n_langs)
-    return {
-        "repo_bucket": pa.array((ukeys // n_langs).astype(np.int32), pa.int32()),
-        "lang": pa.array([LANG_VOCAB[int(k) % n_langs] for k in ukeys], pa.string()),
-        "n_files": pa.array(n_files),
-        "n_null_content": pa.array(nulls),
-        "total_bytes": pa.array(total),
-        "byte_hist": pa.array(list(bh), pa.list_(pa.int64())),
-        "len_hist": pa.array(list(lh), pa.list_(pa.int64())),
-        "fingerprint": pa.array(fpx),
-    }
-
-
-def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
-    """Numpy form of the per-batch histogram partials (see
-    _hist_partial_cols): (ukeys, n_files, nulls, total, bh, lh, fpx)."""
+    bins, and bincounts content bytes. Shared by partial_histograms
+    and fused_scan_partials through _HistAccumulator. Returns
+    (ukeys, n_files, nulls, total, bh, lh, fpx)."""
     n = batch.num_rows
     key = batch.column(0).to_numpy()
     fp = batch.column(1).to_numpy().view(np.uint64)
@@ -322,11 +309,10 @@ def fused_scan_partials(corpus: DataFrame, config: ValidationConfig) -> DataFram
     needs (round-5 optimization): histogram partials AND row-check
     partials from ONE read of the content column.
 
-    validate()'s classic shape scans content twice — once for
-    violations (sha256/null/key projections) and once for histograms.
-    At 100 TB the content scan IS the cost (memory-bandwidth-bound,
-    docs/SCALE.md), so halving scans nearly halves the engine's
-    steady-state wall time. Mechanics:
+    It is the unit payload of the engine's checkpointed walk
+    (validate_incremental, validate_strips(include_violations=True)):
+    each unit's content is read once and committed, and every later
+    step reads only the committed table. Mechanics:
 
     - every expensive per-row expression (sha256, null detail, bucket,
       fingerprint, UTF-8 encode) stays JVM-side codegen;
@@ -335,11 +321,11 @@ def fused_scan_partials(corpus: DataFrame, config: ValidationConfig) -> DataFram
       dropped _bytes buffer) and folds the content buffer into
       histogram partials emitted as kind='h';
     - downstream, filter(kind) splits the (tiny: ~100 B/row + tasks x
-      keys hist rows) fused table; one persist of it replaces a full
-      second corpus scan.
+      keys hist rows) fused table.
 
     Same monoid contract as partial_histograms/row_check_partials —
-    bit-identical outputs to the two-pass path (parity-tested)."""
+    bit-identical outputs to validate()'s two-plan shape
+    (parity-tested)."""
     from sparkval.constraints import NATURAL_KEY, row_check_exprs
 
     n_langs = len(LANG_VOCAB)
@@ -406,16 +392,6 @@ _FUSED_PA_SCHEMA = pa.schema(
 )
 
 
-def split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(hist_partials, row_partials) views of a fused table — filters
-    over the (persisted, tiny) fused output, NOT rescans of content."""
-    hist = fused.filter(F.col("kind") == "h").select(
-        *[f.name for f in PARTIAL_SCHEMA.fields]
-    )
-    rows = fused.filter(F.col("kind") == "r").select(*_ROW_COLS)
-    return hist, rows
-
-
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """numpy merge of partial rows sharing one (repo_bucket, lang):
     scalar sums, xor of fingerprints, elementwise vector sums."""
@@ -444,7 +420,7 @@ MERGED_LANG_SCHEMA = T.StructType(
 )
 
 
-def merge_histograms_with_lang(partials: DataFrame, salt_levels: int = 0) -> DataFrame:
+def merge_histograms_with_lang(partials: DataFrame) -> DataFrame:
     """Fused merge + lang-mix stage: ONE shuffle on repo_bucket does
     both the per-(bucket, lang) histogram merge and the bucket-wide
     lang-mix vector, instead of merge(groupBy bucket,lang) followed by
@@ -453,14 +429,6 @@ def merge_histograms_with_lang(partials: DataFrame, salt_levels: int = 0) -> Dat
     shuffle stages: every stage saved is ~0.5-1 s of latency that would
     otherwise be a fixed serial cost at any cluster size.
     """
-    merged = partials
-    if salt_levels > 0:
-        salted = partials.withColumn(
-            "_salt", F.pmod(F.spark_partition_id(), F.lit(salt_levels))
-        )
-        merged = salted.groupBy("repo_bucket", "lang", "_salt").applyInPandas(
-            lambda pdf: _merge_group(pdf.drop(columns=["_salt"])), PARTIAL_SCHEMA
-        )
 
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = pd.concat([_merge_group(g) for _, g in pdf.groupby("lang", sort=False)])
@@ -470,10 +438,10 @@ def merge_histograms_with_lang(partials: DataFrame, salt_levels: int = 0) -> Dat
         rows["lang_hist"] = [vec] * len(rows)
         return rows
 
-    return merged.groupBy("repo_bucket").applyInPandas(merge_bucket, MERGED_LANG_SCHEMA)
+    return partials.groupBy("repo_bucket").applyInPandas(merge_bucket, MERGED_LANG_SCHEMA)
 
 
-def merge_histograms(partials: DataFrame, salt_levels: int = 0) -> DataFrame:
+def merge_histograms(partials: DataFrame) -> DataFrame:
     """Final per-(repo_bucket, lang) histogram table.
 
     One applyInPandas grouped merge (vector sums are a numpy stack-sum;
@@ -481,25 +449,8 @@ def merge_histograms(partials: DataFrame, salt_levels: int = 0) -> DataFrame:
     results). Versus a posexplode + per-bin hash-agg formulation this
     is ~5x fewer stages — partials are tiny (tasks x keys rows), so
     stage-scheduling overhead, not data volume, dominates the merge.
-
-    ``salt_levels`` > 0 inserts a pre-merge on (key, task-salt) to
-    bound per-group row counts when the map side produced millions of
-    partials (the 100 TB case: 100k tasks x 144 keys -> cap each final
-    group at salt_levels pre-merged rows).
     """
-    keys = ["repo_bucket", "lang"]
-    merged = partials
-    if salt_levels > 0:
-        salted = partials.withColumn(
-            "_salt", F.pmod(F.spark_partition_id(), F.lit(salt_levels))
-        )
-        merged = (
-            salted.groupBy(*keys, "_salt")
-            .applyInPandas(
-                lambda pdf: _merge_group(pdf.drop(columns=["_salt"])), PARTIAL_SCHEMA
-            )
-        )
-    return merged.groupBy(*keys).applyInPandas(_merge_group, PARTIAL_SCHEMA)
+    return partials.groupBy("repo_bucket", "lang").applyInPandas(_merge_group, PARTIAL_SCHEMA)
 
 
 def corpus_histograms(corpus: DataFrame, config: ValidationConfig) -> DataFrame:

@@ -2,9 +2,8 @@
 
 1. connected_components warns (instead of silently returning split
    components) when max_iter is exhausted with labels still moving.
-2. validate(single_scan=True) self-releases the PREVIOUS call's fused
-   scan cache — direct callers in a long-lived session no longer
-   accrete one cached table per call.
+2. Repeated direct validate calls in a long-lived session leave no
+   cached table behind (none accretes call over call).
 3. countmin/bloom/kmv sketch builders cast the value column to string
    (no-op for string inputs), so a non-string column hashes instead of
    crashing the executor, aligned with the codegen estimate chain.
@@ -47,23 +46,21 @@ def test_connected_components_warns_when_unconverged(spark):
 
 def test_validate_self_releases_previous_fused_cache(spark, corpus_pair):
     from sparkval import ValidationConfig, ValidationEngine
-    from sparkval.engine import _SCAN_CACHES, release_scan_caches
+    from sparkval.constraints import content_manifest
 
     corpus, snap, _commits = corpus_pair
     eng = ValidationEngine(ValidationConfig())
     base = eng.build_baseline(corpus)
-    release_scan_caches()
+    manifest = content_manifest(corpus)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
 
-    out1 = eng.validate(snap, base, single_scan=True)
-    out1["verdicts"].count()
-    assert len(_SCAN_CACHES) == 1
-    # second direct call: the first call's cache is drained, not
-    # accreted — at most the new call's own table remains
-    out2 = eng.validate(snap, base, single_scan=True)
-    out2["verdicts"].count()
-    assert len(_SCAN_CACHES) == 1
-    release_scan_caches()
-    assert not _SCAN_CACHES
+    # repeated direct calls, with and without a manifest: none leaves a
+    # cached table, so nothing accretes call over call
+    for kwargs in ({}, {"expected_manifest": manifest}, {}):
+        out = eng.validate(snap, base, **kwargs)
+        assert out["verdicts"].count() > 0 and out["violations"].count() > 0
+        assert cache.isEmpty()
 
 
 def test_sketches_accept_non_string_values(spark):

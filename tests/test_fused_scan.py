@@ -1,27 +1,25 @@
-"""Fused single-scan validate (round 5): one content read produces
-histogram partials AND per-row check partials (histograms.
-fused_scan_partials); validate(single_scan=True) must be bit-identical
-to the classic two-plan shape, and the AUTO default must pick fused
-exactly when the per-row manifest invariant (which forces full-corpus
-sha256 anyway) is requested.
+"""Fused single-scan kernel (histograms.fused_scan_partials): one
+content read produces histogram partials AND per-row check partials.
+It is the unit payload of the engine's checkpointed walk, so
+validate_incremental over a parquet snapshot must be bit-identical to
+validate()'s two-plan shape over the same files.
 """
 
 import numpy as np
 import pytest
 
 from sparkval import ValidationConfig, ValidationEngine, fixtures as fx
-from sparkval.engine import _SCAN_CACHES, release_scan_caches
 
 
 @pytest.fixture(scope="module")
-def tables(spark):
+def tables(spark, tmp_path_factory):
     base_pd, _, commits_pd = fx.make_case("random_mid__identity", n_rows=800)
     snap_pd = fx.distort(fx.distort(base_pd, "dangle_4"), "dup_6")
-    return (
-        spark.createDataFrame(base_pd),
-        spark.createDataFrame(snap_pd),
-        spark.createDataFrame(commits_pd),
-    )
+    d = tmp_path_factory.mktemp("fused")
+    paths = {"base": f"file://{d}/base", "snap": f"file://{d}/snap"}
+    spark.createDataFrame(base_pd).repartition(3).write.parquet(paths["base"])
+    spark.createDataFrame(snap_pd).repartition(3).write.parquet(paths["snap"])
+    return paths, spark.createDataFrame(commits_pd)
 
 
 def _verdict_frames(out):
@@ -37,12 +35,14 @@ def _violation_frame(out):
     return out["violations"].toPandas()[VCOLS].sort_values(VCOLS).reset_index(drop=True)
 
 
-def test_fused_bit_identical_to_classic(spark, tables):
-    base_df, snap, commits = tables
+def test_fused_bit_identical_to_classic(spark, tables, tmp_path):
+    paths, commits = tables
     eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
-    base = eng.build_baseline(base_df)
-    classic = eng.validate(snap, base, commits=commits, single_scan=False)
-    fused = eng.validate(snap, base, commits=commits, single_scan=True)
+    base = eng.build_baseline(spark.read.parquet(paths["base"]))
+    classic = eng.validate(spark.read.parquet(paths["snap"]), base, commits=commits)
+    fused = eng.validate_incremental(
+        paths["snap"], base, f"file://{tmp_path}/cache", commits=commits
+    )
     vc, vf = _verdict_frames(classic), _verdict_frames(fused)
     assert list(vc.columns) == list(vf.columns) and len(vc) > 0
     for col in ("repo_bucket", "lang", "n_files_base", "n_files_snap",
@@ -52,53 +52,38 @@ def test_fused_bit_identical_to_classic(spark, tables):
     assert np.array_equal(vc["pnorm_3"].to_numpy(), vf["pnorm_3"].to_numpy())
     ic, if_ = _violation_frame(classic), _violation_frame(fused)
     assert len(ic) > 0 and ic.equals(if_)
-    assert release_scan_caches() >= 1
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_fused_manifest_parity(spark, tables):
-    """With the expected-manifest invariant (the case AUTO routes to
-    fused), violation rows still match the classic shape exactly."""
+def test_fused_manifest_parity(spark, tables, tmp_path):
+    """With the expected-manifest invariant (per-row sha256 of every
+    row), violation rows still match the classic shape exactly."""
     from sparkval.constraints import content_manifest
 
-    base_df, snap, commits = tables
+    paths, commits = tables
     eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
+    base_df = spark.read.parquet(paths["base"])
     base = eng.build_baseline(base_df)
     manifest = content_manifest(base_df)  # baseline as "reference run"
     classic = eng.validate(
-        snap, base, commits=commits, expected_manifest=manifest, single_scan=False
+        spark.read.parquet(paths["snap"]), base, commits=commits,
+        expected_manifest=manifest,
     )
-    fused = eng.validate(
-        snap, base, commits=commits, expected_manifest=manifest, single_scan=True
+    fused = eng.validate_incremental(
+        paths["snap"], base, f"file://{tmp_path}/cache", commits=commits,
+        expected_manifest=manifest,
     )
     ic, if_ = _violation_frame(classic), _violation_frame(fused)
     assert (ic["check"] == "row_invariant_sha256").any()
     assert ic.equals(if_)
-    release_scan_caches()
 
 
-def test_fused_short_circuit_identity(spark, tables):
-    base_df, _, _ = tables
+def test_fused_short_circuit_identity(spark, tables, tmp_path):
+    paths, _ = tables
     eng = ValidationEngine(ValidationConfig())  # short-circuit ON
-    base = eng.build_baseline(base_df)
-    out = eng.validate(base_df, base, single_scan=True)
-    v = out["verdicts"].toPandas()
+    base = eng.build_baseline(spark.read.parquet(paths["base"]))
+    out = eng.validate_incremental(paths["base"], base, f"file://{tmp_path}/cache")
+    v = _verdict_frames(out)
     assert (v["verdict"] == "PASS").all() and (v["score"] == 0.0).all()
     assert out["violations"].count() == 0
-    release_scan_caches()
-
-
-def test_auto_default_routes_on_manifest(spark, tables):
-    """AUTO = fused exactly when expected_manifest is given — observed
-    via the scan-cache registry the fused path populates."""
-    from sparkval.constraints import content_manifest
-
-    base_df, snap, _ = tables
-    eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
-    base = eng.build_baseline(base_df)
-    release_scan_caches()
-    eng.validate(snap, base)  # no manifest -> classic, no cache entry
-    assert not _SCAN_CACHES
-    eng.validate(snap, base, expected_manifest=content_manifest(base_df))
-    assert len(_SCAN_CACHES) == 1
-    release_scan_caches()
+    classic = eng.validate(spark.read.parquet(paths["base"]), base)
+    assert v.equals(_verdict_frames(classic))

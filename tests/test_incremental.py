@@ -1,6 +1,10 @@
 """Incremental (churn-proportional) validation:
 engine.validate_incremental — per-data-file fused partials,
 content-addressed by (path, size, mtime), reused across runs.
+
+The stale-reuse cases run over both users of the engine's checkpointed
+walk: validate_incremental (one file per unit) and
+validate_strips(include_violations=True) (contiguous file groups).
 """
 
 import time
@@ -31,6 +35,28 @@ def eng():
 
 def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+WALKERS = ["validate_incremental", "validate_strips"]
+
+
+def _walk(walker, eng, snap, base, ckpt):
+    """Run one walker; returns (outputs, units recomputed), the count
+    read from its progress hook (on_file / on_strip)."""
+    recomputed = []
+
+    def hook(i, n, done):
+        recomputed.append(not done)
+
+    if walker == "validate_incremental":
+        out = eng.validate_incremental(snap, base, ckpt, on_file=hook)
+        assert out["n_files_recomputed"] == sum(recomputed)
+        assert out["n_files_reused"] == out["n_files_total"] - sum(recomputed)
+    else:
+        out = eng.validate_strips(
+            snap, base, ckpt, n_strips=2, on_strip=hook, include_violations=True
+        )
+    return out, sum(recomputed)
 
 
 def test_incremental_equals_full_and_reuses(spark, tmp_path, eng):
@@ -81,7 +107,8 @@ def test_incremental_append_recomputes_only_new_file(spark, tmp_path, eng):
     assert _sorted_rows(out["verdicts"]) == _sorted_rows(full["verdicts"])
 
 
-def test_incremental_detects_in_place_rewrite(spark, tmp_path, eng):
+@pytest.mark.parametrize("walker", WALKERS)
+def test_incremental_detects_in_place_rewrite(spark, tmp_path, eng, walker):
     """Same file NAME, new bytes: (size, mtime) addressing must
     recompute it — pure path addressing would serve stale partials."""
     import glob
@@ -92,8 +119,9 @@ def test_incremental_detects_in_place_rewrite(spark, tmp_path, eng):
     corpus.repartition(3).write.parquet(str(snap_dir))
     base = eng.build_baseline(corpus)
     cache = f"file://{tmp_path}/cache"
-    out1 = eng.validate_incremental(str(snap_dir), base, cache)
-    assert out1["n_files_recomputed"] == 3
+    _, n1 = _walk(walker, eng, str(snap_dir), base, cache)
+    # 3 files: 3 units for incremental, strips of 1 and 2 files
+    assert n1 == (3 if walker == "validate_incremental" else 2)
 
     # rewrite one data file in place (same name) with another file's
     # bytes; keep mtime strictly newer
@@ -110,8 +138,8 @@ def test_incremental_detects_in_place_rewrite(spark, tmp_path, eng):
     # test-harness concern: a real writer goes through the FS API)
     shutil.copyfile(_crc(parts[0]), _crc(parts[1]))
 
-    out2 = eng.validate_incremental(str(snap_dir), base, cache)
-    assert out2["n_files_recomputed"] == 1  # only the rewritten file
+    out2, n2 = _walk(walker, eng, str(snap_dir), base, cache)
+    assert n2 == 1  # only the unit holding the rewritten file
     # result reflects the REWRITTEN snapshot (parity with batch)
     full = eng.validate(spark.read.parquet(str(snap_dir)), base)
     assert _sorted_rows(out2["verdicts"]) == _sorted_rows(full["verdicts"])
@@ -142,8 +170,9 @@ def test_incremental_prunes_removed_files(spark, tmp_path, eng):
     assert _sorted_rows(out["violations"]) == _sorted_rows(full["violations"])
 
 
-def test_incremental_config_change_invalidates_cache(spark, tmp_path, eng):
-    """The cache key hashes the ValidationConfig: re-running with a
+@pytest.mark.parametrize("walker", WALKERS)
+def test_incremental_config_change_invalidates_cache(spark, tmp_path, eng, walker):
+    """The unit id hashes the ValidationConfig: re-running with a
     different config must recompute everything, never reuse partials
     bucketed under the old config (review round 5, session 3)."""
     from sparkval import ValidationConfig, ValidationEngine
@@ -154,18 +183,18 @@ def test_incremental_config_change_invalidates_cache(spark, tmp_path, eng):
     cache = f"file://{tmp_path}/cache"
 
     base = eng.build_baseline(corpus)
-    out1 = eng.validate_incremental(snap, base, cache)
-    assert out1["n_files_recomputed"] == 2
+    _, n1 = _walk(walker, eng, snap, base, cache)
+    assert n1 == 2
 
     other = ValidationEngine(
         ValidationConfig(short_circuit_identical=False, n_repo_buckets=32)
     )
     base32 = other.build_baseline(corpus)
-    out2 = other.validate_incremental(snap, base32, cache)
-    assert out2["n_files_recomputed"] == 2  # no stale reuse
-    assert out2["n_files_reused"] == 0
+    out2, n2 = _walk(walker, other, snap, base32, cache)
+    assert n2 == 2  # no stale reuse
     full = other.validate(spark.read.parquet(snap), base32)
     assert _sorted_rows(out2["verdicts"]) == _sorted_rows(full["verdicts"])
+    assert _sorted_rows(out2["violations"]) == _sorted_rows(full["violations"])
 
 
 def test_incremental_covers_partitioned_layout(spark, tmp_path, eng):

@@ -6,8 +6,8 @@
    the two renames leaves .__old__ which fs_read_text serves.
 3. decode_stub contract: deterministic_fake=True ALWAYS returns the
    seeded fake vector, even for decodable payloads.
-4. validate_with_stop releases the fused scan cache it created;
-   validate_resumable never creates one.
+4. validate_with_stop and validate_resumable leave the session's
+   cache manager empty, also with a manifest.
 """
 
 import numpy as np
@@ -20,7 +20,6 @@ from sparkval import (
     ValidationEngine,
     fixtures as fx,
 )
-from sparkval.engine import _SCAN_CACHES, release_scan_caches
 
 
 def _corpus(spark, n=1500):
@@ -110,6 +109,8 @@ def test_decode_stub_fake_flag_is_a_contract():
 
 
 def test_with_stop_releases_fused_cache_resumable_never_creates(spark, tmp_path):
+    """validate_with_stop and validate_resumable, given a manifest,
+    leave no cached table in the session's cache manager."""
     from sparkval.constraints import content_manifest
 
     base_pd = fx.make_case("random_mid__identity", n_rows=500)[0]
@@ -118,17 +119,19 @@ def test_with_stop_releases_fused_cache_resumable_never_creates(spark, tmp_path)
     eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
     base = eng.build_baseline(base_df)
     manifest = content_manifest(base_df)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
 
-    release_scan_caches()
     stop = CancellationToken(spark)
     out = eng.validate_with_stop(snap, base, stop, expected_manifest=manifest)
-    assert out["verdicts"].count() > 0
-    assert not _SCAN_CACHES  # the fused persist was released in-call
+    assert out["verdicts"].count() > 0 and out["violations"].count() > 0
+    assert cache.isEmpty()
 
-    eng.validate_resumable(
+    out = eng.validate_resumable(
         snap, base, str(tmp_path / "ckr"), expected_manifest=manifest
-    )["verdicts"].count()
-    assert not _SCAN_CACHES  # resumable pins the classic shape
+    )
+    assert out["verdicts"].count() > 0 and out["violations"].count() > 0
+    assert cache.isEmpty()
 
 
 def test_write_metrics_fs_form(spark, tmp_path):

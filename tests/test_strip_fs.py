@@ -261,14 +261,15 @@ def test_sidecar_config_survives_compact_and_explicit_param(spark, tmp_path):
 
 def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
     """validate_strips(include_violations=True) is THE resumable full
-    validate (round-4 verdict #2): once a strip's two partial tables
-    are committed, its content is never read again. Proven by
-    poisoning the snapshot's bytes in place after the first run —
-    the resumed run must skip every strip and return the ORIGINAL
-    violations (a rescan would surface the planted extras), while a
-    fresh-checkpoint run over the same poisoned files sees them."""
+    validate (round-4 verdict #2): once a strip's partials are
+    committed, its content is never read again. Proven by wiping every
+    part file's data pages in place after the first run, keeping each
+    file's name, size and mtime (so the strip ids, which hash them,
+    are unchanged): the resumed run must skip every strip and return
+    the ORIGINAL violations, while a fresh-checkpoint run over the
+    same files fails to read them."""
     import os
-    import shutil
+    import struct
 
     eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
     corpus = _corpus(spark, n=2000)
@@ -284,19 +285,22 @@ def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
     v1 = out1["violations"].toPandas()
     assert len(v1) > 0  # the planted dups are visible
 
-    # poison: rewrite the same part-file NAMES with a corpus holding 12
-    # extra duplicates (strip ids hash the file path list, so names
-    # must be preserved; .crc shadows are dropped so the new bytes stay
-    # readable if anything were to read them)
-    snap2 = corpus.union(corpus.limit(12))
-    path2 = str(tmp_path / "snap_poison_v2.parquet")
-    snap2.coalesce(1).repartition(4).write.parquet(path2)
-    parts1 = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    parts2 = sorted(f for f in os.listdir(path2) if f.endswith(".parquet"))
-    assert len(parts1) == len(parts2) == 4
-    for a, b in zip(parts1, parts2):
-        shutil.copyfile(os.path.join(path2, b), os.path.join(path, a))
-        crc = os.path.join(path, f".{a}.crc")
+    # poison: zero everything between the leading PAR1 magic and the
+    # footer (the footer stays readable for schema discovery), then
+    # restore the mtime; .crc shadows are dropped so the checksummed
+    # local FS does not reject the rewritten bytes on open
+    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    assert len(parts) == 4
+    for name in parts:
+        f = os.path.join(path, name)
+        st = os.stat(f)
+        with open(f, "r+b") as fh:
+            fh.seek(st.st_size - 8)
+            footer_len = struct.unpack("<i", fh.read(4))[0]
+            fh.seek(4)
+            fh.write(b"\0" * (st.st_size - 8 - footer_len - 4))
+        os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+        crc = os.path.join(path, f".{name}.crc")
         if os.path.exists(crc):
             os.remove(crc)
     spark.catalog.refreshByPath(path)
@@ -313,9 +317,9 @@ def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
     b = v2[key].sort_values(key).reset_index(drop=True)
     assert a.equals(b)  # original violations — content never rescanned
 
-    # sanity: the poison IS detectable from the bytes on disk
-    out3 = eng.validate_strips(
-        path, base, str(tmp_path / "ck_freshval"), n_strips=4,
-        include_violations=True,
-    )
-    assert len(out3["violations"].toPandas()) > len(v1)
+    # sanity: the poisoned bytes cannot be read, so a rescan would show
+    with pytest.raises(Exception):
+        eng.validate_strips(
+            path, base, str(tmp_path / "ck_freshval"), n_strips=4,
+            include_violations=True,
+        )["violations"].count()
